@@ -233,21 +233,20 @@ def next_round() -> int:
     return max(ahead) if ahead else current
 
 
-def prior_best_per_query(
-    current_round: int, sf: float | None = None
-) -> dict[str, float]:
-    """Best (minimum) recorded mean per query across all PRIOR rounds'
-    payloads — driver-recorded ``BENCH_r*.json`` and the committed
-    ``BENCH_local_r*.json`` — restricted to payloads at the SAME sf
-    (comparing an sf0.01 smoke run against sf0.1 history would flag
-    nonsense both ways).  This is the reference point for the
-    automatic regression tripwire (VERDICT r4 item 5): round 3's
-    "12 queries slower" scare was diagnosed by hand; now the payload
-    carries the per-query deltas itself."""
+def history_payloads(
+    current_round: int, sf: float | None = None, cpus: int | None = None
+) -> list[dict]:
+    """Prior rounds' bench payloads, the one history filter behind the
+    tripwire: driver-recorded ``BENCH_r{N}.json`` and committed
+    ``BENCH_local_r{N}.json`` with N < ``current_round``, restricted to
+    payloads at the SAME sf and cpus (``None`` = any).  An sf0.01 smoke
+    run or an 8-core rerun judged against 32-core sf0.1 history would
+    flag nonsense both ways.  Suffixed reruns (``BENCH_r15_c8.json``)
+    never match the filename pattern."""
     import re
 
     here = Path(__file__).resolve().parent
-    best: dict[str, float] = {}
+    out: list[dict] = []
     for p in sorted(here.glob("BENCH_*r*.json")):
         m = re.match(r"BENCH_(?:local_)?r(\d+)\.json$", p.name)
         if not m or int(m.group(1)) >= current_round:
@@ -258,6 +257,23 @@ def prior_best_per_query(
             continue
         if sf is not None and payload.get("sf") != sf:
             continue
+        if cpus is not None and payload.get("cpus") != cpus:
+            continue
+        out.append(payload)
+    return out
+
+
+def prior_best_per_query(
+    current_round: int, sf: float | None = None, cpus: int | None = None
+) -> dict[str, float]:
+    """Best (minimum) recorded mean per query across the
+    :func:`history_payloads` at this sf and cpus.  This is the
+    reference point for the automatic regression tripwire (VERDICT r4
+    item 5): round 3's "12 queries slower" scare was diagnosed by hand;
+    now the payload carries the per-query deltas itself."""
+    here = Path(__file__).resolve().parent
+    best: dict[str, float] = {}
+    for payload in history_payloads(current_round, sf, cpus):
         # Compare like with like: the current run trips on per-query
         # BEST repeats, so prefer the prior payload's recorded "best"
         # dict (present from r5 locals onward); fall back to the
@@ -302,10 +318,11 @@ def prior_best_per_query(
 
 
 def prior_scan_rate_anchor(
-    current_round: int, sf: float | None = None
+    current_round: int, sf: float | None = None, cpus: int | None = None
 ) -> float | None:
-    """MEDIAN prior-round ``rows_per_sec_per_core`` (same-sf payloads):
-    the same-protocol host-speed anchor the drift normalization below
+    """MEDIAN prior-round ``rows_per_sec_per_core`` over the
+    :func:`history_payloads` at this sf and cpus: the same-protocol
+    host-speed anchor the drift normalization below
     compares the current run's scan probe against.  Median, not max
     (ADVICE r9): anchoring to the best-EVER rate made relief > 1 on
     almost every run — an extreme-value anchor that systematically
@@ -314,20 +331,8 @@ def prior_scan_rate_anchor(
     hour).  The median of prior rounds reflects typical same-epoch
     host speed, so relief engages only when the current hour is
     genuinely slower than usual."""
-    import re
-
-    here = Path(__file__).resolve().parent
     rates: list[float] = []
-    for p in sorted(here.glob("BENCH_*r*.json")):
-        m = re.match(r"BENCH_(?:local_)?r(\d+)\.json$", p.name)
-        if not m or int(m.group(1)) >= current_round:
-            continue
-        try:
-            payload = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if sf is not None and payload.get("sf") != sf:
-            continue
+    for payload in history_payloads(current_round, sf, cpus):
         rate = payload.get("rows_per_sec_per_core") or (
             payload.get("parsed") or {}
         ).get("rows_per_sec_per_core")
@@ -535,7 +540,7 @@ def main() -> None:
     host_drift = 1.0
     if scan is not None and scan.get("rows_per_sec_per_core"):
         cur_rate = statistics.median(scan["rows_per_sec_per_core"].values())
-        prior_rate = prior_scan_rate_anchor(round_no, sf=sf)
+        prior_rate = prior_scan_rate_anchor(round_no, sf=sf, cpus=int(cpus))
         if prior_rate and cur_rate > 0:
             host_drift = prior_rate / cur_rate
     # fold in prior same-round runs BEFORE the tripwire: the committed
@@ -548,7 +553,9 @@ def main() -> None:
     # burst must swallow all N repeats to fake a regression, while a
     # real plan regression raises the best too
     reg_names, reg_detail = detect_regressions(
-        bests, prior_best_per_query(round_no, sf=sf), host_drift=host_drift
+        bests,
+        prior_best_per_query(round_no, sf=sf, cpus=int(cpus)),
+        host_drift=host_drift,
     )
     headline = {
         "metric": "suite_mean_sec",

@@ -20,8 +20,10 @@ identity (any parse/format defect breaks the hash), and the curation
 quirks (Z1 type defaults, F8 enum-or-NULL, F9 payment normalization,
 F10 flag, F12 fixed-string pad) all land in the checked output.
 
-Scale note: the same function drives the bench big path at ~60 M rows
-(bench.py --sf-big); correctness here, throughput there.
+Scale note: ``perfbench``'s ``taxi_ingest`` workload times the same
+chain (``read_trips_csv`` -> ``curate_trips`` -> ``write_gold`` over
+shards of ``synth_trips_staging`` rows); correctness here, throughput
+there.
 """
 
 from __future__ import annotations

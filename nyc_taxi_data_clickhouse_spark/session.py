@@ -39,7 +39,15 @@ def default_shuffle_partitions() -> int:
         cores = 0
     if cores <= 0:
         cores = os.cpu_count() or 8
-    return int(os.environ.get("SPARK_GRAFT_SHUFFLE", cores))
+    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE")
+    if shuffle is None:
+        return cores
+    try:
+        return int(shuffle)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_SHUFFLE must be an integer partition count, got {shuffle!r}"
+        ) from None
 
 
 def get_spark(

@@ -127,394 +127,27 @@ def _driver_verified_rounds() -> dict:
     return verified
 
 
-@functools.lru_cache(maxsize=None)
-def _files_changed_since_round(round_no: int) -> frozenset[str]:
-    """Repo-relative paths that changed (committed or working-tree)
-    since the driver commit that recorded ``CORRECTNESS_r{N}.json`` —
-    i.e. since the round in which an entry was last hash-verified.
-
-    Used by :func:`registry` to put changed-implementation entries ahead
-    of merely-stale ones in the driver's bounded verification window
-    (VERDICT r8 item 6): round 3's events-timestamp change broke three
-    entries whose green rows dated to rounds 1-2, and staleness rotation
-    alone re-checks them only when they happen to be oldest.  Any git
-    failure degrades to "nothing changed" (pure staleness order)."""
-    import subprocess
-    from pathlib import Path
-
-    repo_root = Path(__file__).resolve().parent.parent
-    rev = _round_rev(round_no)
-    if not rev:
-        return frozenset()
-    try:
-        out = subprocess.run(
-            ["git", "diff", "--name-only", rev],
-            cwd=repo_root, capture_output=True, text=True, timeout=15,
-        ).stdout
-        return frozenset(line.strip() for line in out.splitlines() if line.strip())
-    except Exception:
-        return frozenset()
-
-
-@functools.lru_cache(maxsize=None)
-def _round_rev(round_no: int) -> str | None:
-    """Commit hash that recorded ``CORRECTNESS_r{N}.json`` (the round's
-    driver commit), or None when git/the marker is unavailable."""
-    import subprocess
-    from pathlib import Path
-
-    repo_root = Path(__file__).resolve().parent.parent
-    marker = f"CORRECTNESS_r{round_no:02d}.json"
-    try:
-        rev = subprocess.run(
-            ["git", "log", "-1", "--format=%H", "--", marker],
-            cwd=repo_root, capture_output=True, text=True, timeout=15,
-        ).stdout.strip()
-        return rev or None
-    except Exception:
-        return None
-
-
-def _normalize_tree(tree):
-    """Strip semantics-free content in place: comments are already
-    absent from the AST; module/class/function docstrings and ``doc=``
-    keyword arguments (the registry's human-facing metadata) go here.
-    Returns the tree."""
-    import ast
-
-    for node in ast.walk(tree):
-        if isinstance(
-            node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-        ):
-            body = node.body
-            if (
-                body
-                and isinstance(body[0], ast.Expr)
-                and isinstance(body[0].value, ast.Constant)
-                and isinstance(body[0].value.value, str)
-            ):
-                node.body = body[1:]
-        if isinstance(node, ast.Call):
-            node.keywords = [k for k in node.keywords if k.arg != "doc"]
-    return tree
-
-
-def _rel_of_file(f: str | None) -> str | None:
-    """Repo-relative path for an absolute module file, or None for
-    files outside the repo."""
-    import os
-    from pathlib import Path
-
-    if not f:
-        return None
-    repo_root = Path(__file__).resolve().parent.parent
-    try:
-        rel = os.path.relpath(f, repo_root)
-    except ValueError:
-        return None
-    return None if rel.startswith("..") else rel
-
-
-def _entry_referenced_objects(
-    spec: "QuerySpec",
-) -> frozenset[tuple[str, str | None]]:
-    """``(relpath, def_name | None)`` pairs the entry's registered
-    function visibly depends on BESIDES its defining module: functions
-    and classes it reaches through module globals or body-local
-    imports (the repo's prevailing late-import style) resolve to
-    ``(helper_module, name)``; whole-module references (``import m`` /
-    attribute access on a module global) resolve to ``(module,
-    None)``.  Used to attribute HELPER changes to the entries that
-    actually call them — the r14 bit-I/O fix lived in
-    operators/multimodal.py while the media entries register in
-    suite_entries.py, so defining-module granularity alone would never
-    re-verify them.  Known limits (documented, not traced):
-    plain-value constants imported from helpers, and helpers reached
-    through more than one module hop."""
-    import ast
-    import importlib.util
-    import inspect
-    import sys
-    import types
-
-    fn = spec.spark
-    cache_key = (getattr(fn, "__module__", None), getattr(fn, "__qualname__", None))
-    cached = _REFERENCED_OBJECTS_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-
-    try:
-        tree = ast.parse(inspect.getsource(fn))
-    except Exception:
-        return frozenset()
-    mod = sys.modules.get(getattr(fn, "__module__", None) or "")
-    own = _rel_of_file(getattr(mod, "__file__", None))
-    pkg = __package__ or "nyc_taxi_data_clickhouse_spark"
-    refs: set[tuple[str | None, str | None]] = set()
-
-    def _spec_origin(name: str) -> str | None:
-        try:
-            found = importlib.util.find_spec(name)
-        except Exception:
-            return None
-        return found.origin if found else None
-
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
-            obj = getattr(mod, node.id, None)
-            if isinstance(obj, types.ModuleType):
-                refs.add((_rel_of_file(getattr(obj, "__file__", None)), None))
-            elif callable(obj) or isinstance(obj, type):
-                m = sys.modules.get(getattr(obj, "__module__", None) or "")
-                refs.add(
-                    (
-                        _rel_of_file(getattr(m, "__file__", None)),
-                        getattr(obj, "__name__", None),
-                    )
-                )
-        elif isinstance(node, ast.Import):
-            for alias in node.names:
-                if alias.name.startswith(pkg):
-                    refs.add((_rel_of_file(_spec_origin(alias.name)), None))
-        elif isinstance(node, ast.ImportFrom):
-            if not node.module or node.level or not node.module.startswith(pkg):
-                continue
-            for alias in node.names:
-                sub = _spec_origin(f"{node.module}.{alias.name}")
-                if sub:  # `from pkg.operators import dedup` — a module
-                    refs.add((_rel_of_file(sub), None))
-                else:
-                    refs.add(
-                        (_rel_of_file(_spec_origin(node.module)), alias.name)
-                    )
-
-    out = frozenset(
-        (rel, name) for rel, name in refs if rel is not None and rel != own
-    )
-    _REFERENCED_OBJECTS_CACHE[cache_key] = out
-    return out
-
-
-_REFERENCED_OBJECTS_CACHE: dict = {}
-
-
-@functools.lru_cache(maxsize=None)
-def _module_graph(rev: str | None, rel: str):
-    """``(defs, refs, residue)`` for module ``rel`` at commit ``rev``
-    (working tree when ``rev`` is None), normalized via
-    :func:`_normalize_tree`:
-
-    - ``defs``: every top-level bound name (def / class / assignment /
-      import alias) -> normalized dump of its binding statement;
-    - ``refs``: bound name -> the set of OTHER top-level names its
-      statement references (the same-module dependency graph
-      :func:`_def_closure_sig` walks);
-    - ``residue``: dump of the top-level statements that bind nothing
-      (module-level conf mutations, try/except setup blocks) — these
-      can affect ANY function in the module, so their changes are
-      attributed to every consumer.
-
-    None when unreadable or unparsable.  Working-tree results are
-    cached for the process lifetime (same staleness contract as the
-    git-diff cache)."""
-    import subprocess
-    from pathlib import Path
-
-    repo_root = Path(__file__).resolve().parent.parent
-    try:
-        if rev is None:
-            src = (repo_root / rel).read_text()
-        else:
-            shown = subprocess.run(
-                ["git", "show", f"{rev}:{rel}"],
-                cwd=repo_root, capture_output=True, text=True, timeout=15,
-            )
-            if shown.returncode != 0:
-                return None
-            src = shown.stdout
-        return _graph_from_source(src)
-    except Exception:
-        return None
-
-
-def _graph_from_source(src: str):
-    """Pure builder behind :func:`_module_graph` — parse + normalize
-    ``src`` and return ``(defs, refs, residue)``.  Raises on
-    unparsable source (the IO wrapper maps that to None)."""
-    import ast
-
-    tree = _normalize_tree(ast.parse(src))
-
-    defs: dict[str, str] = {}
-    nodes: dict[str, "ast.AST"] = {}
-    unbound = []
-    for node in tree.body:
-        names: list[str] = []
-        if isinstance(
-            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-        ):
-            names = [node.name]
-        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
-            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-            for t in targets:
-                for el in ast.walk(t):
-                    if isinstance(el, ast.Name):
-                        names.append(el.id)
-        elif isinstance(node, ast.Import):
-            names = [a.asname or a.name.split(".")[0] for a in node.names]
-        elif isinstance(node, ast.ImportFrom):
-            names = [a.asname or a.name for a in node.names]
-        if not names:
-            unbound.append(node)
-        for name in names:
-            defs[name] = ast.dump(node)
-            nodes[name] = node
-    refs: dict[str, frozenset[str]] = {}
-    for name, node in nodes.items():
-        used = {
-            x.id for x in ast.walk(node) if isinstance(x, ast.Name)
-        } & set(defs)
-        used.discard(name)
-        refs[name] = frozenset(used)
-    import ast as _ast
-
-    residue = _ast.dump(_ast.Module(body=unbound, type_ignores=[]))
-    return defs, refs, residue
-
-
-@functools.lru_cache(maxsize=None)
-def _def_closure_sig(rev: str | None, rel: str, fname: str):
-    """Signature of ``fname``'s transitive same-module closure: the
-    normalized dumps of its binding statement plus every top-level
-    def / constant / import it references, recursively, plus the
-    module's unbound residue.  This is what makes any function
-    comparable across revisions WITHOUT module granularity:
-    ``decode``-style helpers change through their private callees (the
-    r14 ``_BitReader`` fix never touched the functions the entries
-    import), while unrelated code in the same module — e.g. the
-    verification machinery sharing suite.py with the reference-parity
-    entries — stays out of the signature.  None when the module is
-    unparsable or the name is absent."""
-    g = _module_graph(rev, rel)
-    if g is None:
-        return None
-    defs, refs, residue = g
-    if fname not in defs:
-        return None
-    seen: set[str] = set()
-    stack = [fname]
-    while stack:
-        cur = stack.pop()
-        if cur in seen:
-            continue
-        seen.add(cur)
-        stack.extend(refs.get(cur, ()))
-    return (residue, tuple(sorted((n, defs[n]) for n in seen)))
-
-
-def _helper_changed(rev: str, rel: str, fname: str | None) -> bool:
-    """Did ``(rel, fname)`` semantically change between ``rev`` and the
-    working tree?  ``fname=None`` compares the whole module (the
-    reference was to the module object, so any of it may be used); a
-    named def compares its same-module transitive closure + residue.
-    Unresolvable states are conservative (changed)."""
-    if not rel.endswith(".py"):
-        return True
-    if fname is None:
-        old = _module_graph(rev, rel)
-        new = _module_graph(None, rel)
-        return old is None or new is None or old != new
-    old = _def_closure_sig(rev, rel, fname)
-    new = _def_closure_sig(None, rel, fname)
-    return old is None or new is None or old != new
-
-
-def _entry_changed_since_round(spec: "QuerySpec", round_no: int) -> bool:
-    """True when the entry's implementation may have changed since the
-    round that last hash-verified it: the closure of its registered
-    function in its defining module changed (decorator SQL oracle
-    included, ``doc=``/comments/docstrings excluded), or a helper the
-    function references (one module hop, closure-compared) did."""
-    rev = _round_rev(round_no)
-    if rev is None:
-        return False
-    diff = _files_changed_since_round(round_no)
-    rel = _entry_module_relpath(spec)
-    fname = getattr(spec.spark, "__name__", None)
-    if (
-        rel is not None
-        and rel in diff
-        and (fname is None or _helper_changed(rev, rel, fname))
-    ):
-        return True
-    return any(
-        helper_rel in diff and _helper_changed(rev, helper_rel, helper_name)
-        for helper_rel, helper_name in _entry_referenced_objects(spec)
-    )
-
-
-def _entry_module_relpath(spec: "QuerySpec") -> str | None:
-    """The repo-relative source file implementing an entry's Spark
-    callable (module granularity — the unit the judge's incident model
-    cares about: 'the implementation module changed')."""
-    import os
-    import sys
-    from pathlib import Path
-
-    mod = sys.modules.get(getattr(spec.spark, "__module__", None) or "")
-    f = getattr(mod, "__file__", None)
-    if not f:
-        return None
-    repo_root = Path(__file__).resolve().parent.parent
-    try:
-        return os.path.relpath(f, repo_root)
-    except ValueError:  # different drive (never on this platform)
-        return None
-
-
 # Driver verification-window mechanics (VERDICT r10 item 1).  The
 # driver hash-checks the first DRIVER_WINDOW entries of registry()
 # order each round (observed exactly 50 in CORRECTNESS_r01..r10).
 DRIVER_WINDOW = 50
-# A verified entry whose green row is MUST_REVERIFY_AGE driver rounds
-# old is promoted ahead of the changed-module tier: in round 10 the
-# module-granularity change detector (one edit to suite_entries.py
-# promotes dozens of entries) filled all window slots for five straight
-# rounds and starved 15 entries at round-5 freshness — exactly the
-# trust-forever failure the staleness rotation exists to prevent.
+# Soft staleness bound the rotation tests enforce: a verified entry's
+# green row should be at most MUST_REVERIFY_AGE driver rounds old.
 MUST_REVERIFY_AGE = 4
 # Absolute bound tests enforce: with never-verified entries capped at a
-# handful per round, a must-reverify entry displaced from one window is
-# stalest in the next, so age never exceeds MUST_REVERIFY_AGE + 2.
+# handful per round, an entry displaced from one window is stalest in
+# the next, so age never exceeds MUST_REVERIFY_AGE + 2.
 STALENESS_HARD_CAP = 6
 
 
-def _ordered_names(
-    order: list[str],
-    verified: dict[str, int],
-    changed: Callable[[str, int], bool],
-) -> list[str]:
+def _ordered_names(order: list[str], verified: dict[str, int]) -> list[str]:
     """Pure ordering rule for the driver's bounded window:
-    (0) never-hash-verified entries, registration order (new entries
-        get their first driver check in their introduction round);
-    (1) MUST-RE-VERIFY: verified entries whose green row is
-        >= MUST_REVERIFY_AGE driver rounds old, stalest first — ahead
-        of the changed tier so change-detection pressure can never
-        starve them past the trust bound (VERDICT r10 item 1);
-    (2) verified entries whose implementation changed since their
-        verification round, stalest first;
-    (3) merely-stale verified entries, stalest first."""
-    latest = max(verified.values(), default=0)
-
-    def key(name: str):
-        if name not in verified:
-            return (0, 0, order.index(name))
-        rnd = verified[name]
-        if latest - rnd >= MUST_REVERIFY_AGE:
-            return (1, rnd, order.index(name))
-        return (2 if changed(name, rnd) else 3, rnd, order.index(name))
-
-    return sorted(order, key=key)
+    never-hash-verified entries first (new entries get their first
+    driver check in their introduction round), then verified entries
+    least-recently-verified first, so the window's remaining slots
+    re-check the stalest green rows.  The sort is stable, so ties keep
+    registration order."""
+    return sorted(order, key=lambda name: (name in verified, verified.get(name, 0)))
 
 
 def registry() -> dict[str, QuerySpec]:
@@ -538,22 +171,8 @@ def registry() -> dict[str, QuerySpec]:
     from nyc_taxi_data_clickhouse_spark.operators import round12_ops  # noqa: F401
     from nyc_taxi_data_clickhouse_spark.operators import round13_ops  # noqa: F401
 
-    verified = _driver_verified_rounds()
-    order = list(_REGISTRY)
-
-    # never-verified entries first (registration order), then entries
-    # whose green row hit the MUST_REVERIFY_AGE trust bound (the r10
-    # starvation class), then verified entries whose implementation
-    # changed since their last verified round (the r3 events-timestamp
-    # incident class; ENTRY-level semantic deltas since r15 — module
-    # remainder or own registered function, never a sibling's body or
-    # a comment), then the merely-stale — each verified tier
-    # least-recently-verified first so the window re-checks the
-    # stalest green rows
-    def _changed(name: str, round_no: int) -> bool:
-        return _entry_changed_since_round(_REGISTRY[name], round_no)
-
-    return {name: _REGISTRY[name] for name in _ordered_names(order, verified, _changed)}
+    ordered = _ordered_names(list(_REGISTRY), _driver_verified_rounds())
+    return {name: _REGISTRY[name] for name in ordered}
 
 
 # ===========================================================================

@@ -1,10 +1,10 @@
-"""Capture .explain("formatted") for named queries into plans/r16/.
+"""Capture .explain("formatted") for named queries into plans/<out-subdir>/.
 
 Usage::
 
-    python plans_r16_capture.py <tag> [query ...]
+    python plans_capture.py <out-subdir> <tag> [query ...]
 
-``tag`` is appended to the filename (``plans/r16/<query>_<tag>.txt``);
+``tag`` is appended to the filename (``plans/<out-subdir>/<query>_<tag>.txt``);
 with no query list, every bench.py DEFAULT_QUERIES entry plus
 ``token_budget_packing`` is captured.  Runs at $SPARK_GRAFT_SF_DIR
 (default sf0.1) so the plans match the bench numbers.
@@ -17,6 +17,7 @@ DataFrame's physical plan exactly as ``explain`` prints it.
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -30,16 +31,22 @@ from nyc_taxi_data_clickhouse_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("out_subdir", help="directory under plans/, e.g. r16")
+    ap.add_argument("tag", help="filename suffix, e.g. before or after")
+    ap.add_argument(
+        "queries", nargs="*", default=[], help="registry names (default: bench set)"
+    )
+    args = ap.parse_args()
+    names = args.queries
     if not names:
         from bench import DEFAULT_QUERIES
 
         names = list(DEFAULT_QUERIES) + ["token_budget_packing"]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = Path(__file__).resolve().parent / "plans" / "r16"
+    out_dir = Path(__file__).resolve().parent / "plans" / args.out_subdir
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(app_name=f"plans-r16-{tag}")
+    spark = get_spark(app_name=f"plans-{args.out_subdir}-{args.tag}")
     spark.sparkContext.setLogLevel("ERROR")
     reg = suite.registry()
     for name in names:
@@ -51,7 +58,7 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        path = out_dir / f"{name}_{tag}.txt"
+        path = out_dir / f"{name}_{args.tag}.txt"
         path.write_text(buf.getvalue())
         print(f"wrote {path.name} ({len(buf.getvalue())} bytes)")
         spark.catalog.clearCache()

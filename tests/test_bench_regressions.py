@@ -33,18 +33,18 @@ def test_flags_only_material_slowdowns():
 
 
 def test_prior_best_reads_committed_rounds():
-    """The repo root carries BENCH_r01..r06 + locals; the per-query best
-    must be the minimum across them and exclude the current round.
-    Mirrors bench.prior_best_per_query's source preference: a payload's
-    recorded "best" dict wins over its per-query means, and driver
-    payloads nest the headline under "parsed"."""
-    best = bench.prior_best_per_query(current_round=99)
+    """The repo root carries BENCH_r01..r16 + locals; the per-query best
+    must be the minimum across the same-sf, same-cpus history and
+    exclude the current round.  Mirrors bench.prior_best_per_query's
+    source preference: a payload's recorded "best" dict wins over its
+    per-query means, and driver payloads nest the headline under
+    "parsed"."""
+    best = bench.prior_best_per_query(current_round=99, sf=0.1, cpus=32)
     assert "q1_group_count" in best
     import json
 
     mins: dict[str, float] = {}
-    for p in Path(bench.__file__).resolve().parent.glob("BENCH_*r*.json"):
-        payload = json.loads(p.read_text())
+    for payload in bench.history_payloads(99, sf=0.1, cpus=32):
         parsed = payload.get("parsed") or {}
         source = (
             payload.get("best")
@@ -76,7 +76,7 @@ def test_accepted_baseline_raises_reference_only():
     standing attributed FEATURE pins (r11 dropped the five drift pins
     after the best-of-runs payload cleared them) — and must never
     LOWER a reference or apply before their acceptance round."""
-    best = bench.prior_best_per_query(current_round=99)
+    best = bench.prior_best_per_query(current_round=99, sf=0.1, cpus=32)
     assert best["pii_scrub_documents"] == 1.15  # raised from the 4-pattern era
     assert best["url_canonical_dedup"] == 0.65  # raised from the 1-arm era
     # the dropped drift pins no longer lift anything: raw history rules
@@ -89,6 +89,17 @@ def test_accepted_baseline_raises_reference_only():
     sf01 = bench.prior_best_per_query(current_round=99, sf=0.1)
     assert sf01  # committed history is at sf0.1
     assert bench.prior_best_per_query(current_round=99, sf=123.0) == {}
+
+    # cpus filter: the 8-core payloads (BENCH_local_r17.json, and the
+    # suffixed BENCH_r15_c8/BENCH_r16_c8 reruns) never feed the 32-core
+    # reference set
+    history = bench.history_payloads(99, sf=0.1, cpus=32)
+    assert history and all(p["cpus"] == 32 for p in history)
+    # the c8 reruns are the only 8-core driver payloads (nested under
+    # "parsed"); the filename pattern drops them
+    assert not any("parsed" in p for p in bench.history_payloads(99, cpus=8))
+    assert best["multimodal_y4m_video"] > 0.41  # r17's 8-core best
+    assert bench.prior_best_per_query(current_round=99, sf=0.1, cpus=123) == {}
 
 
 def test_drift_normalization_relaxes_reference():
@@ -123,22 +134,8 @@ def test_prior_scan_rate_anchor_reads_history():
     # (ADVICE r9: an extreme-value anchor systematically relaxes the
     # tripwire) — with >=3 recorded rounds the median must sit strictly
     # below the max unless all rates are equal
-    import json
-    import re
-    from pathlib import Path
-
     rates = []
-    here = Path(bench.__file__).resolve().parent
-    for p in sorted(here.glob("BENCH_*r*.json")):
-        m = re.match(r"BENCH_(?:local_)?r(\d+)\.json$", p.name)
-        if not m or int(m.group(1)) >= 99:
-            continue
-        try:
-            payload = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if payload.get("sf") != 0.1:
-            continue
+    for payload in bench.history_payloads(99, sf=0.1):
         r = payload.get("rows_per_sec_per_core") or (
             payload.get("parsed") or {}
         ).get("rows_per_sec_per_core")

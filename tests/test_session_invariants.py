@@ -76,35 +76,25 @@ def test_nanos_invariant_is_set_by_factory(spark):
 
 
 # ---------------------------------------------------------------------------
-# Driver-window ordering (VERDICT r8 item 6): changed-code-first
+# Driver-window ordering: never-verified first, then stalest verified
 # ---------------------------------------------------------------------------
 
 
 def test_ordered_names_changed_code_first():
-    """The pure ordering rule (r11 form): never-verified entries lead
-    in registration order; entries whose green row hit the
-    MUST_REVERIFY_AGE trust bound come next regardless of change
-    status (VERDICT r10 item 1 — the changed tier starved them for
-    five rounds); then changed-implementation entries; then the
-    merely-stale; every verified group stalest-first."""
+    """The pure two-tier ordering rule: never-verified entries lead in
+    registration order; every verified entry follows stalest-first,
+    ties in registration order.  No entry jumps ahead of a staler one
+    because its code changed."""
     from nyc_taxi_data_clickhouse_spark.suite import _ordered_names
 
     order = ["a", "b", "c", "d", "e", "f"]
     verified = {"b": 3, "c": 1, "d": 5, "f": 2}
-    changed = lambda name, rnd: name in {"d", "f"}  # noqa: E731
-    got = _ordered_names(order, verified, changed)
-    # a, e never verified (registration order); c(1) is 4 rounds old
-    # vs latest=5 -> MUST-re-verify tier, ahead of the changed tier
-    # even though it did not change; f(2) & d(5) changed, stalest
-    # first; b(3) merely stale
-    assert got == ["a", "e", "c", "f", "d", "b"]
+    # a, e never verified; then c(1), f(2), b(3), d(5)
+    assert _ordered_names(order, verified) == ["a", "e", "c", "f", "b", "d"]
 
-    # a changed entry that ALSO hits the bound sorts in the must tier
+    # equal rounds keep registration order
     verified2 = {"b": 3, "c": 1, "d": 5, "f": 1}
-    got2 = _ordered_names(order, verified2, changed)
-    # c(1, unchanged) and f(1, changed) both at the bound: stalest
-    # first then registration order; d(5) changed; b(3) stale
-    assert got2 == ["a", "e", "c", "f", "d", "b"]
+    assert _ordered_names(order, verified2) == ["a", "e", "c", "f", "b", "d"]
 
 
 def test_ordered_names_no_changes_degrades_to_staleness():
@@ -112,47 +102,59 @@ def test_ordered_names_no_changes_degrades_to_staleness():
 
     order = ["x", "y", "z"]
     verified = {"x": 2, "y": 1, "z": 3}
-    got = _ordered_names(order, verified, lambda n, r: False)
-    assert got == ["y", "x", "z"]
+    assert _ordered_names(order, verified) == ["y", "x", "z"]
 
 
-def test_registry_ordering_uses_git_changed_files():
-    """End-to-end: _files_changed_since_round reads real git state and
-    the registry consumes it without error; entries whose registered
-    function SEMANTICALLY changed since their verified round (the
-    entry-granular closure rule the registry uses since r15 — a
-    sibling's edit or a comment does not promote) must sort before
-    unchanged entries of equal-or-staler rounds."""
-    from nyc_taxi_data_clickhouse_spark.suite import (
-        _driver_verified_rounds,
-        _entry_changed_since_round,
-        _files_changed_since_round,
-        registry,
+def test_registry_makes_no_subprocess_call():
+    """registry() is a plain, deterministic dict: in a fresh interpreter
+    with subprocess.run/Popen replaced by a recorder that raises, it
+    starts no process (no git) and returns every registered entry in
+    the pure staleness order over the driver reports."""
+    import json
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    code = textwrap.dedent(
+        """
+        import json
+        import subprocess
+
+        calls = []
+
+        def forbid(*args, **kwargs):
+            calls.append(repr(args[0] if args else kwargs.get("args")))
+            raise RuntimeError("registry() started a subprocess")
+
+        subprocess.run = subprocess.Popen = forbid
+        from nyc_taxi_data_clickhouse_spark import suite
+
+        names = list(suite.registry())
+        print(json.dumps({
+            "calls": calls,
+            "names": names,
+            "registered": list(suite._REGISTRY),
+            "verified": suite._driver_verified_rounds(),
+        }))
+        """
     )
-
-    from nyc_taxi_data_clickhouse_spark.suite import MUST_REVERIFY_AGE
-
-    verified = _driver_verified_rounds()
-    reg = registry()
-    names = list(reg)
-    # every name is present exactly once, whatever the order
-    assert sorted(names) == sorted(set(names))
-    latest = max(verified.values(), default=0)
-    changed_files = _files_changed_since_round(latest)
-    assert isinstance(changed_files, frozenset)
-    # invariant (r11 rule): never-verified < must-re-verify (at the
-    # trust bound) < changed < merely-stale (the sort is total, so it
-    # suffices to check group monotonicity) — the changed predicate
-    # here is the registry's own, so the test re-checks the real rule
-    def group(n):
-        if n not in verified:
-            return 0
-        if latest - verified[n] >= MUST_REVERIFY_AGE:
-            return 1
-        return 2 if _entry_changed_since_round(reg[n], verified[n]) else 3
-
-    groups = [group(n) for n in names]
-    assert groups == sorted(groups)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    assert got["calls"] == []
+    registered, verified = got["registered"], got["verified"]
+    assert len(got["names"]) == len(set(got["names"])) == len(registered)
+    expected = sorted(
+        registered,
+        key=lambda n: (n in verified, verified.get(n, 0), registered.index(n)),
+    )
+    assert got["names"] == expected
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +166,8 @@ def test_registry_ordering_uses_git_changed_files():
 def test_default_shuffle_partitions_honors_spark_graft_cpus(monkeypatch):
     """Pure derivation rule: $SPARK_GRAFT_CPUS wins when numeric,
     $SPARK_GRAFT_SHUFFLE overrides everything, os.cpu_count() is the
-    fallback for unset/non-numeric values."""
+    fallback for unset/non-numeric values; a non-numeric
+    $SPARK_GRAFT_SHUFFLE fails with a message naming it."""
     import os
 
     from nyc_taxi_data_clickhouse_spark.session import (
@@ -181,6 +184,9 @@ def test_default_shuffle_partitions_honors_spark_graft_cpus(monkeypatch):
     assert default_shuffle_partitions() == (os.cpu_count() or 8)
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     assert default_shuffle_partitions() == (os.cpu_count() or 8)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "lots")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE.*'lots'"):
+        default_shuffle_partitions()
 
 
 def test_bench_session_parallelism_matches_spark_graft_cpus():

@@ -58,40 +58,25 @@ def test_queries_oracle_keys_consistent():
 
 
 def test_rotation_orders_stalest_verified_first():
-    """Never-driver-verified entries come first (they need their first
-    hash check); verified entries whose green row hit the
-    MUST_REVERIFY_AGE trust bound come next, ahead of change-detection
-    pressure (VERDICT r10 item 1 — in rounds 6-10 the module-granularity
-    changed tier filled every window slot and starved 15 entries at
-    round-5 freshness); entries whose implementation module changed
-    since their verification round follow (VERDICT r8 item 6 — the r3
-    events-timestamp incident class; ENTRY-level semantic deltas since
-    r15); merely-stale verified entries close.  Each verified group is
-    in ascending last-verified round so the window's slots re-check
+    """Never-driver-verified entries come first, in registration order
+    (they need their first hash check); every verified entry follows
+    in ascending last-verified round, so the window's slots re-check
     the stalest green rows first."""
     from nyc_taxi_data_clickhouse_spark import suite
 
-    reg = suite.registry()
-    order = list(reg)
+    order = list(suite.registry())
     rounds = suite._driver_verified_rounds()
-    latest = max(rounds.values(), default=0)
-
-    def group(name: str) -> int:
-        if name not in rounds:
-            return 0
-        if latest - rounds[name] >= suite.MUST_REVERIFY_AGE:
-            return 1
-        changed = suite._entry_changed_since_round(reg[name], rounds[name])
-        return 2 if changed else 3
-
-    groups = [group(n) for n in order]
-    assert groups == sorted(groups), "group order violated (0 < 1 < 2 < 3)"
-    for g in (1, 2, 3):
-        members = [n for n in order if group(n) == g]
-        member_rounds = [rounds[n] for n in members]
-        assert member_rounds == sorted(member_rounds), (
-            f"group {g} not stalest-first: {list(zip(members, member_rounds))[:6]}"
-        )
+    never = [n for n in order if n not in rounds]
+    assert order[: len(never)] == never, "a verified entry precedes a never-verified one"
+    registered = list(suite._REGISTRY)
+    assert never == sorted(never, key=registered.index), (
+        "never-verified entries out of registration order"
+    )
+    member_rounds = [rounds[n] for n in order[len(never):]]
+    assert member_rounds == sorted(member_rounds), (
+        f"verified tier not stalest-first: "
+        f"{list(zip(order[len(never):], member_rounds))[:6]}"
+    )
 
 
 def test_rotation_staleness_bounded():
@@ -161,20 +146,14 @@ def test_intake_leaves_room_for_must_reverify_cohort():
     """Intake policy (COVERAGE.md, decided r13; reformulated r15): the
     registry is capped at REGISTRY_CAP entries (4 full driver cohorts),
     and the rotation must actually deliver its staleness promise under
-    the CURRENT registry + changed-tier pressure.  The r13 static bound
-    (`never + due_next <= window`) silently assumed the changed tier is
-    empty — any genuinely-changed entry displaces a due-next one and
-    the bound reads as an intake violation even though the rotation
-    self-heals through the must-reverify tier.  So assert the REAL
-    invariant by forward-simulating the driver's window rule for 8
-    rounds with the live registry, verified map, and semantic
-    changed-detector: no entry's green-row age may ever exceed
-    MUST_REVERIFY_AGE + 1 (one displaced round + the catch-up round,
-    still far inside STALENESS_HARD_CAP), and the rotation must return
-    to the steady state (max age < MUST_REVERIFY_AGE) by simulation
-    end.  New-entry intake is covered by the same simulation: a
-    too-large never-verified prefix starves the tiers behind it and
-    blows the age bound."""
+    the CURRENT registry.  So forward-simulate the driver's window rule
+    for 8 rounds with the live registry and verified map: no entry's
+    green-row age may ever exceed MUST_REVERIFY_AGE + 1 (one displaced
+    round + the catch-up round, still far inside STALENESS_HARD_CAP),
+    and the rotation must return to the steady state (max age <
+    MUST_REVERIFY_AGE) by simulation end.  New-entry intake is covered
+    by the same simulation: a too-large never-verified prefix starves
+    the stalest entries behind it and blows the age bound."""
     from collections import Counter
 
     from nyc_taxi_data_clickhouse_spark import suite
@@ -191,15 +170,10 @@ def test_intake_leaves_room_for_must_reverify_cohort():
     order = list(reg)
     verified = dict(rounds)
 
-    def changed(name, rnd):
-        return suite._entry_changed_since_round(reg[name], rnd)
-
     latest = max(verified.values())
     trajectory = []
     for rnd in range(latest + 1, latest + 9):
-        window = suite._ordered_names(order, verified, changed)[
-            : suite.DRIVER_WINDOW
-        ]
+        window = suite._ordered_names(order, verified)[: suite.DRIVER_WINDOW]
         for n in window:
             verified[n] = rnd
         ages = [rnd - verified[n] for n in reg if n in verified]
@@ -213,7 +187,7 @@ def test_intake_leaves_room_for_must_reverify_cohort():
             f"simulated round +{rnd - latest}: an entry reaches age "
             f"{max(ages)} (> {suite.MUST_REVERIFY_AGE + 1}) — the "
             f"rotation cannot keep its staleness promise with the "
-            f"current registry size / changed tier; histogram "
+            f"current registry size; histogram "
             f"{dict(sorted(Counter(ages).items()))}"
         )
     assert trajectory[-1] < suite.MUST_REVERIFY_AGE, (
@@ -276,107 +250,3 @@ def test_no_shorthand_whitespace_class_in_paired_regexes():
             if "\\s" in line:
                 offenders.append(f"{p.relative_to(pkg)}:{ln}:{line.strip()[:70]}")
     assert not offenders, offenders[:10]
-
-
-# ---------------------------------------------------------------------------
-# Semantic change-detector units (r15): the driver window's changed
-# tier promotes an entry only when something that can affect its
-# RESULT changed — its function's same-module transitive closure
-# (helpers, constants, imports, decorator SQL, unbound module residue)
-# — never comments, docstrings, doc= metadata, or sibling entries.
-# ---------------------------------------------------------------------------
-
-_MOD_V1 = '''
-"""module docstring"""
-import math
-X = 3
-def helper(a):
-    # a comment
-    return a + X
-@register("e1", "SELECT 1", doc="meta")
-def e1(spark, sf):
-    return helper(1)
-@register("e2", "SELECT 2", doc="meta")
-def e2(spark, sf):
-    return math.pi
-'''
-
-
-def _sig(src, fname):
-    from nyc_taxi_data_clickhouse_spark import suite
-
-    defs, refs, residue = suite._graph_from_source(src)
-    seen, stack = set(), [fname]
-    while stack:
-        cur = stack.pop()
-        if cur in seen:
-            continue
-        seen.add(cur)
-        stack.extend(refs.get(cur, ()))
-    return (residue, tuple(sorted((n, defs[n]) for n in seen)))
-
-
-def test_semantic_graph_ignores_comments_docstrings_doc_metadata():
-    from nyc_taxi_data_clickhouse_spark import suite
-
-    v2 = _MOD_V1.replace('"""module docstring"""', '"""rewritten"""')
-    v2 = v2.replace("# a comment", "# different comment")
-    v2 = v2.replace('doc="meta"', 'doc="reworded meta"')
-    assert suite._graph_from_source(_MOD_V1) == suite._graph_from_source(v2)
-
-
-def test_semantic_closure_isolates_siblings_but_tracks_helpers():
-    # editing e2's body changes e2's closure only
-    v2 = _MOD_V1.replace("return math.pi", "return math.tau")
-    assert _sig(_MOD_V1, "e1") == _sig(v2, "e1")
-    assert _sig(_MOD_V1, "e2") != _sig(v2, "e2")
-    # editing the helper (or the constant it folds in) changes e1, not e2
-    v3 = _MOD_V1.replace("return a + X", "return a - X")
-    assert _sig(_MOD_V1, "e1") != _sig(v3, "e1")
-    assert _sig(_MOD_V1, "e2") == _sig(v3, "e2")
-    v4 = _MOD_V1.replace("X = 3", "X = 4")
-    assert _sig(_MOD_V1, "e1") != _sig(v4, "e1")
-    assert _sig(_MOD_V1, "e2") == _sig(v4, "e2")
-
-
-def test_semantic_closure_tracks_oracle_sql_and_residue():
-    # the decorator's SQL oracle is part of the entry's signature
-    v2 = _MOD_V1.replace('"SELECT 1"', '"SELECT 99"')
-    assert _sig(_MOD_V1, "e1") != _sig(v2, "e1")
-    assert _sig(_MOD_V1, "e2") == _sig(v2, "e2")
-    # an unbound module-level statement (side-effecting setup) is
-    # attributed to every function in the module
-    v3 = _MOD_V1 + "\nprint('side effect')\n"
-    assert _sig(_MOD_V1, "e1") != _sig(v3, "e1")
-    assert _sig(_MOD_V1, "e2") != _sig(v3, "e2")
-
-
-def test_changed_tier_contains_only_semantic_deltas():
-    """Live-repo guard: every entry the current checkout promotes into
-    the changed tier must be attributable to a real semantic delta —
-    and entries in touched-but-semantically-unchanged modules must NOT
-    be promoted (a pure comment/doc edit to an operator module may not
-    displace the stale cohort from the driver window)."""
-    from nyc_taxi_data_clickhouse_spark import suite
-
-    reg = suite.registry()
-    rounds = suite._driver_verified_rounds()
-    if not rounds:
-        return
-    for name, spec in reg.items():
-        rnd = rounds.get(name)
-        if rnd is None:
-            continue
-        if suite._entry_changed_since_round(spec, rnd):
-            rev = suite._round_rev(rnd)
-            rel = suite._entry_module_relpath(spec)
-            fname = spec.spark.__name__
-            own = rel in suite._files_changed_since_round(rnd) and (
-                suite._helper_changed(rev, rel, fname)
-            )
-            helper = any(
-                hrel in suite._files_changed_since_round(rnd)
-                and suite._helper_changed(rev, hrel, hname)
-                for hrel, hname in suite._entry_referenced_objects(spec)
-            )
-            assert own or helper, f"{name} promoted without a delta"
