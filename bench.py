@@ -58,6 +58,8 @@ DEFAULT_QUERIES = [
     "events_hourly_agg",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
+    # r16 persisted simhash's signature table; tracked since then
+    "dedup_simhash",
     "text_quality",
     "ann_topk_cosine",
     "asof_join",

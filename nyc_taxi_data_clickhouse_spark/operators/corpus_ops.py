@@ -215,7 +215,7 @@ def domain_mix_temperature(
 ) -> DataFrame:
     from pyspark.sql import Window
 
-    from nyc_taxi_data_clickhouse_spark.operators.stats import _group_table_hint
+    from nyc_taxi_data_clickhouse_spark.partitioning import group_table_hint
 
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_total"))
@@ -233,7 +233,7 @@ def domain_mix_temperature(
     bucket = ((F.col("doc_id") % 1000003) * F.lit(2654435761)) % 100
     # per-domain side table: unbounded cardinality on a real crawl, so
     # the broadcast is count-gated with a shuffle-join fallback
-    hint = _group_table_hint(rates, broadcast_side, label="domain_mix_rates")
+    hint = group_table_hint(rates, broadcast_side, label="domain_mix_rates")
     kept = docs.select("lang", bucket.alias("__b")).join(hint(rates), "lang")
     return kept.groupBy("lang", "n_total", "rate").agg(
         F.sum((F.col("__b") < F.col("rate")).cast("long")).alias("n_kept")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_clickhouse_spark import partitioning
 from nyc_taxi_data_clickhouse_spark.operators.text import tokens
 
 # ---------------------------------------------------------------------------
@@ -179,44 +180,6 @@ def _verified_jaccard(
     )
 
 
-#: measured ratio of the shingle self-join's SORT bytes to the docs
-#: table's on-disk bytes, from the r8 x256 decade probe: 229 MB of
-#: salted documents.parquet sorted 70.4 GB inside the 32-partition
-#: self-join (~300x; the explode turns every compressed text byte into
-#: ~a (hash, id) shuffle row).  Rounded down to 256 so the derived
-#: count lands at ~458 partitions for that probe — the same regime as
-#: the measured-good 512 (spill 70.4 -> 38.6 GB, CPU -26 %).
-#:
-#: This constant is the CONSERVATIVE GATE only (VERDICT r9 item 4): it
-#: decides whether sizing engages at all; the actual width then comes
-#: from the live per-corpus calibration below, so a corpus with a
-#: different doc-length / compression profile cannot re-admit spill
-#: through a miscalibrated fixed factor.
-JACCARD_SHUFFLE_EXPANSION = 256.0
-
-#: bytes of self-join sort state per shingle row, back-derived from the
-#: r8 x256 probe: 70.4 GB sorted / (1.28 M docs x 52.1 shingles/doc)
-#: ~ 1.06 kB per (8 B hash, 8 B id) row — UnsafeRow, sort-buffer and
-#: both join legs included.  Rounded to 1024: the derived width for
-#: that probe is 508, i.e. the measured-good 512 (zero spill, -26 %
-#: CPU).  Unlike the bytes-ratio above this unit is LAYOUT-FREE — it
-#: does not depend on the corpus's parquet compression or doc length,
-#: which the live probe measures instead.
-JACCARD_SORT_BYTES_PER_SHINGLE = 1024.0
-
-#: bytes of per-task state per shingle row for the MINHASH path —
-#: far below jaccard's 1024: minhash never explodes shingle pairs, so
-#: the widest per-task state is the verification SMJ sort (~32 B/row)
-#: plus the 64-long signature agg map (~12 B amortized per shingle
-#: row).  Calibrated by the r16 x256 width sweep (same host, same
-#: session protocol): derived widths {33, 66, 133, 266, 533} measured
-#: {3625, 2097, 2494, 2209, 2738} CPU core-s — 128 B/row lands the
-#: derived width at 66 for that probe, the measured optimum (-39 %
-#: CPU vs the session-default 32), with 33 re-admitting GC pressure
-#: (613 core-s GC) and 533 re-admitting task-floor overhead (the r8
-#: initialPartitionNum lesson).
-MINHASH_SORT_BYTES_PER_SHINGLE = 128.0
-
 #: hash-spread sample bound for the live calibration probe
 _CALIBRATION_SAMPLE_DOCS = 4096
 
@@ -226,7 +189,7 @@ def _calibrated_jaccard_partitions(
     text_col: str,
     id_col: str,
     n: int,
-    bytes_per_shingle: float = JACCARD_SORT_BYTES_PER_SHINGLE,
+    bytes_per_shingle: float | None = None,
 ) -> int | None:
     """Data-calibrated shuffle width for the shingle exchanges
     (VERDICT r9 item 4).  The former fixed bytes-expansion factor was
@@ -235,7 +198,7 @@ def _calibrated_jaccard_partitions(
     several-fold.  Here the expansion is derived live:
 
         shingle rows ~ N_docs x avg shingles/doc        (measured)
-        width = ceil(rows x JACCARD_SORT_BYTES_PER_SHINGLE / 128 MB)
+        width = ceil(rows x bytes_per_shingle / 128 MB)
 
     avg shingles/doc comes from a deterministic hash-spread sample of
     ~2x4096 docs (``pmod(xxhash64(id), K) == 0`` — layout-independent,
@@ -244,14 +207,20 @@ def _calibrated_jaccard_partitions(
     corpus size.  Cost gating: the probe runs ONLY when the static
     conservative estimate already engages (derived n > session
     default), so every small-SF plan stays byte-identical AND
-    job-count-identical to the un-sized one."""
-    from nyc_taxi_data_clickhouse_spark.partitioning import (
-        sized_partitions_for_rows,
-        sized_shuffle_partitions,
-    )
+    job-count-identical to the un-sized one.
 
-    static_n = sized_shuffle_partitions(
-        docs.select(id_col, text_col), JACCARD_SHUFFLE_EXPANSION
+    ``bytes_per_shingle`` defaults to jaccard's
+    ``partitioning.JACCARD_SORT_BYTES_PER_SHINGLE``.  The static gate's
+    expansion scales with it, so a lighter footprint (minhash's 128 B)
+    skips the probe wherever the width it would derive cannot clear the
+    session default either."""
+    if bytes_per_shingle is None:
+        bytes_per_shingle = partitioning.JACCARD_SORT_BYTES_PER_SHINGLE
+    static_n = partitioning.sized_shuffle_partitions(
+        docs.select(id_col, text_col),
+        partitioning.JACCARD_SHUFFLE_EXPANSION
+        * bytes_per_shingle
+        / partitioning.JACCARD_SORT_BYTES_PER_SHINGLE,
     )
     if static_n is None:
         return None
@@ -269,7 +238,7 @@ def _calibrated_jaccard_partitions(
     )
     if avg_sh is None or avg_sh <= 0:
         return static_n
-    return sized_partitions_for_rows(
+    return partitioning.sized_partitions_for_rows(
         int(n_docs * float(avg_sh)),
         bytes_per_shingle,
         docs.sparkSession,
@@ -507,16 +476,20 @@ def minhash_lsh_pairs(
     -26 % CPU).  Default None derives the width live via the SAME
     calibration machinery the jaccard path uses (identical shingle
     geometry: same tokenize, same n) but with minhash's own per-row
-    footprint (:data:`MINHASH_SORT_BYTES_PER_SHINGLE` — no pair
-    explosion here, so jaccard's 1024 B/row over-widens ~8x and
+    footprint (``partitioning.MINHASH_SORT_BYTES_PER_SHINGLE`` — no
+    pair explosion here, so jaccard's 1024 B/row over-widens ~8x and
     measured +30 % at the x64 probe), engaging only above the session
-    default, so small-SF plans stay byte-identical.  When it engages, the persisted shingle
-    table is hash-partitioned ONCE on ``__id`` at the derived width:
-    the signature groupBy and both exact-verification join legs are
-    keyed on ``__id`` (the b-leg on (``__id``, ``__sh``), which a
-    ``__id`` subset partitioning also satisfies), so every downstream
-    shingle-scale exchange reuses the one sized exchange instead of
-    re-shuffling the table at the session width per consumer.
+    default, so small-SF plans stay byte-identical.  When it engages,
+    the persisted shingle table is hash-partitioned ONCE on ``__id`` at
+    the derived width: the signature groupBy and the a-leg of the exact
+    verification join are keyed on ``__id`` and reuse that exchange.
+    The b-leg is keyed on (``__id``, ``__sh``).  The r16 stage profiles
+    (PySpark 4.1.2, default co-partitioning rules such as
+    ``spark.sql.requireAllClusterKeysForCoPartition``) show it reusing
+    the ``__id`` exchange too, so no shingle-scale exchange re-shuffles
+    the table at the session width.  That reuse is the planner's
+    choice: another Spark version, config or surrounding plan may add
+    an exchange there.
     """
     rows_per_band = num_hashes // bands
     if shuffle_partitions is None:
@@ -525,7 +498,7 @@ def minhash_lsh_pairs(
             text_col,
             id_col,
             n,
-            bytes_per_shingle=MINHASH_SORT_BYTES_PER_SHINGLE,
+            bytes_per_shingle=partitioning.MINHASH_SORT_BYTES_PER_SHINGLE,
         )
     # r14: persist the FULL shingle table once — the cap's df groupBy,
     # the signature aggregate, and BOTH verification join sides derive
@@ -884,24 +857,6 @@ def _union_find_member(edges: DataFrame) -> DataFrame:
     return edges.coalesce(1).mapInPandas(uf, schema="node long, component long")
 
 
-#: Edge count above which the star rounds hint shuffle_hash on the
-#: per-key min tables (see the gate comment in
-#: :func:`connected_components_star`).  At ~16 B/row of (key, min) the
-#: 64 MB auto-broadcast bound sits near 4 M rows, and the min tables
-#: are bounded by the edge count — hint at half that for headroom.
-_STAR_SHJ_EDGE_BOUND = 2_000_000
-
-
-def _star_shj_bound() -> int:
-    """Env-overridable for A/B measurement (corpus_scale_bench probes):
-    ``SPARK_GRAFT_STAR_SHJ_BOUND`` — set huge to force the un-hinted
-    planner fallback, 0 to always hint."""
-    import os
-
-    v = os.environ.get("SPARK_GRAFT_STAR_SHJ_BOUND")
-    return int(v) if v else _STAR_SHJ_EDGE_BOUND
-
-
 def connected_components_star(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -981,23 +936,14 @@ def connected_components_star(
         # possible on the build side), so hint shuffle_hash and skip
         # the sorts.  n_edges is already known per round from the
         # fixpoint fingerprint — the gate costs zero extra jobs.
-        if n_edges > _star_shj_bound():
-            rh = lambda d: d.hint("shuffle_hash")  # noqa: E731
-        else:
-            rh = lambda d: d  # noqa: E731
+        rh = partitioning.star_round_join_hint(n_edges)
         # Data-sized round shuffles (VERDICT r8 item 1): the fixpoint
         # fingerprint already carries the exact entering edge count, so
         # the round's group/join exchanges can be sized to the data for
-        # free.  ~48 B/edge of sort/hash state per undirected edge row;
-        # engages only when the derived count exceeds the session
-        # default (>~40M edges at 32 cores), so every probe scale and
-        # the sf0.1 headline keep their current byte-identical plans.
-        from nyc_taxi_data_clickhouse_spark.partitioning import (
-            sized_partitions_for_rows,
-        )
-
-        n_round = sized_partitions_for_rows(
-            2 * n_edges, 48.0, pairs.sparkSession
+        # free (partitioning.STAR_BYTES_PER_EDGE per undirected edge
+        # row; engages only above the session default).
+        n_round = partitioning.sized_partitions_for_rows(
+            2 * n_edges, partitioning.STAR_BYTES_PER_EDGE, pairs.sparkSession
         )
         rp = (
             (lambda d, key: d.repartition(n_round, key))

@@ -457,9 +457,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from nyc_taxi_data_clickhouse_spark.partitioning import (
-        sized_shuffle_partitions,
-    )
+    from nyc_taxi_data_clickhouse_spark import partitioning
     from nyc_taxi_data_clickhouse_spark.scratch import track_persist
 
     docs = load_table(spark, sf_dir, "documents")
@@ -469,15 +467,10 @@ def token_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(F.col("doc_id"), toks.alias("toks"))
 
     # Shard count: session default, data-sized upward for corpora whose
-    # (doc_id, toks, shard) exchange would overfill the default width
-    # (expansion = shuffled ~24 B/row over the docs scan's plan bytes —
-    # the narrow projection is a small fraction of the text payload;
-    # probe-calibrated, see SCALING_CPU_r15_packing).
-    try:
-        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        default = 200
-    n_shards = sized_shuffle_partitions(t, expansion=0.1) or default
+    # (doc_id, toks, shard) exchange would overfill the default width.
+    n_shards = partitioning.sized_shuffle_partitions(
+        t, partitioning.PACKING_SHUFFLE_EXPANSION
+    ) or partitioning.session_shuffle_partitions(spark)
 
     # Phase 0 — deterministic range cuts on the leading key only (one
     # cheap single-column pass; 1% balance error only costs balance,

@@ -82,9 +82,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nyc_taxi_data_clickhouse_spark.partitioning import (
-    cpu_map_min_partitions,
-)
+from nyc_taxi_data_clickhouse_spark.partitioning import widen_for_cpu_map
 
 #: canonical media column bundle: payload + typed metadata
 MEDIA_STRUCT = T.StructType(
@@ -4053,12 +4051,9 @@ def synthesize_media(df: DataFrame, modality: str, id_col: str = "media_id") -> 
     # round-robin exchange moves only the 8-byte ids — payload bytes
     # are BORN in their final partition and never shuffle (the map-only
     # invariant tests/test_plan_hygiene.py pins above the synth stage).
-    # On inputs that already arrive parallel the helper returns None
-    # and the plan is exchange-free as before.
-    n_min = cpu_map_min_partitions(ids)
-    if n_min:
-        ids = ids.repartition(n_min)
-    return ids.mapInPandas(synth, schema=SYNTH_SCHEMA)
+    # Inputs that already arrive parallel pass through unchanged, so
+    # their plan stays exchange-free.
+    return widen_for_cpu_map(ids).mapInPandas(synth, schema=SYNTH_SCHEMA)
 
 
 def sample_frames(

@@ -165,7 +165,7 @@ def quality_percentile_by_domain(
     *,
     broadcast_side: bool | None = None,
 ) -> DataFrame:
-    from nyc_taxi_data_clickhouse_spark.operators.stats import _group_table_hint
+    from nyc_taxi_data_clickhouse_spark.partitioning import group_table_hint
 
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
     scored = docs.select(
@@ -184,7 +184,7 @@ def quality_percentile_by_domain(
     # (domain, bucket) cardinality is unbounded on a real crawl, so the
     # broadcast must be guarded exactly like the per-group stats tables
     # in exact order statistics: count-gated, shuffle-join fallback.
-    hint = _group_table_hint(cdf, broadcast_side, label="domain_quality_cdf")
+    hint = group_table_hint(cdf, broadcast_side, label="domain_quality_cdf")
     return scored.join(hint(cdf), ["lang", "bucket"]).select(
         "doc_id",
         "lang",

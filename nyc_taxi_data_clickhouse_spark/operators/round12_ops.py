@@ -58,6 +58,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_clickhouse_spark import partitioning
 from nyc_taxi_data_clickhouse_spark.suite import load_events, load_table, register
 
 # ---------------------------------------------------------------------------
@@ -70,13 +71,6 @@ ITEM_OFFSET = 1_000_000
 
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 3
-
-#: broadcast the rank/degree side tables only below this node count —
-#: ~16 B/row keeps the build inside the broadcast threshold with
-#: headroom (same bound class as stats.BROADCAST_GROUP_BOUND); above
-#: it the per-iteration joins become shuffled-hash joins against
-#: src-partitioned checkpointed edges (ranks is the build side)
-RANK_BROADCAST_BOUND = 500_000
 
 
 def interaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,8 +103,7 @@ _EDGES_SQL = (
 
 
 def pagerank(edges: DataFrame, iters: int = PAGERANK_ITERS,
-             damping: float = PAGERANK_DAMPING,
-             rank_broadcast_bound: int | None = None) -> DataFrame:
+             damping: float = PAGERANK_DAMPING) -> DataFrame:
     """Fixed-iteration PageRank with uniform teleport and dangling-mass
     redistribution::
 
@@ -178,7 +171,7 @@ def pagerank(edges: DataFrame, iters: int = PAGERANK_ITERS,
     # superlinear CPU tail came from exactly this)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     edges_deg = edges.join(outdeg, "src").select("src", "dst", "outdeg")
-    # count-gated join strategy (the stats.py broadcast-guard pattern;
+    # count-gated join strategy (partitioning.side_table_join_hint;
     # checkpointed localCheckpoint stats default to "huge", so without
     # the gate the planner falls back to sort-merge and re-SORTS the
     # edge list every iteration).  Below the bound the per-node side
@@ -188,16 +181,9 @@ def pagerank(edges: DataFrame, iters: int = PAGERANK_ITERS,
     # no per-iteration sort of the edge list either way.  nodes is
     # checkpointed, so the gate count is a metadata-cheap scalar (the
     # dedup.py fixpoint-counter class of collect, not a data-path one).
-    bound = (
-        RANK_BROADCAST_BOUND
-        if rank_broadcast_bound is None
-        else rank_broadcast_bound
-    )
     n_nodes = nodes.count()
-    if n_nodes <= bound:
-        small = F.broadcast
-    else:
-        small = lambda d: d.hint("shuffle_hash")  # noqa: E731
+    small = partitioning.side_table_join_hint(n_nodes)
+    if small is not F.broadcast:
         edges_deg = edges_deg.repartition("src")
     edges_deg = edges_deg.localCheckpoint(eager=True)
     # N as a literal (n_nodes just collected for the gate); the `or 1`
@@ -359,8 +345,7 @@ _SOCIAL_EDGES_SQL = """
 """
 
 
-def triangle_count(edges: DataFrame,
-                   node_broadcast_bound: int | None = None) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Count triangles in an undirected graph given canonical ``a < b``
     edges, via degree ordering: orient every edge from the endpoint
     with smaller ``(degree, id)`` toward the larger, generate wedges by
@@ -394,15 +379,7 @@ def triangle_count(edges: DataFrame,
     # oriented edge list itself — never broadcastable at scale, but
     # hash-joinable without sorting either side).  deg is checkpointed,
     # so the gate count is a metadata-cheap scalar.
-    bound = (
-        RANK_BROADCAST_BOUND
-        if node_broadcast_bound is None
-        else node_broadcast_bound
-    )
-    if deg.count() <= bound:
-        small = F.broadcast
-    else:
-        small = lambda d: d.hint("shuffle_hash")  # noqa: E731
+    small = partitioning.side_table_join_hint(deg.count())
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
     with_deg = edges.join(small(da), "a").join(small(db), "b")

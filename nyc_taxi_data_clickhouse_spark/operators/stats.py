@@ -25,9 +25,10 @@ The bracket trick replaces it with bounded-memory passes:
 Every stage is a hash aggregate or a tiny window — whole-stage
 codegen, no UDF, no per-group value buffering.  The per-group side
 tables (stats / below / above) are broadcast only under a group-count
-bound (``BROADCAST_GROUP_BOUND``; see ``_group_table_hint``) — above
-it they shuffle-join on the group key, so high group cardinality can
-never turn the broadcast into a driver-memory hazard.
+bound (``partitioning.BROADCAST_GROUP_BOUND``, applied by
+``partitioning.group_table_hint``) — above it they shuffle-join on the
+group key, so high group cardinality can never turn the broadcast into
+a driver-memory hazard.
 
 Why two functions: at q = 0.5 the straddle ranks n/2 and n/2+1 sit
 symmetrically around the bracket center, so quantiles 0.5 ± δ are
@@ -43,96 +44,10 @@ filtered pass) — two more cheap stages.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Broadcast the per-group side tables only below this group count.
-# At ~100 B/row of (key, n, lo, hi, r1, r2) this is ≈50 MB — inside
-# the session's 64 MB autoBroadcastJoinThreshold with headroom.
-# Above it, broadcasting a per-group table is a driver-collect/OOM
-# hazard, so the joins fall back to shuffle joins (still hash joins
-# on the group key; AQE may re-plan them at runtime).
-BROADCAST_GROUP_BOUND = 500_000
-
-
-def _catalyst_group_count(stats: DataFrame) -> int | None:
-    """Catalyst CBO row-count estimate of the optimized plan — defined
-    when the inputs are ANALYZE'd catalog tables (``ANALYZE TABLE ...
-    COMPUTE STATISTICS FOR ALL COLUMNS``) and ``spark.sql.cbo.enabled``
-    is on: the Aggregate node estimates its output row count from the
-    group-key NDV column statistic.  None when the cost model has no
-    estimate (un-analyzed tables, in-memory DataFrames, CBO off).
-    Evaluating plan statistics is pure plan-side metadata — it runs NO
-    Spark job (asserted in tests/test_stats.py)."""
-    try:
-        rc = stats._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        return int(str(rc.get())) if rc.isDefined() else None
-    except Exception:  # py4j / internal-API drift must never fail the op
-        return None
-
-
-def _group_table_hint(
-    stats: DataFrame,
-    broadcast_stats: bool | None,
-    bound: int | None = None,
-    label: str = "group_stats_guard",
-) -> Callable[[DataFrame], DataFrame]:
-    """Return the hint applied to every per-group side table (stats /
-    below / above — all ≤ group cardinality, so one decision covers
-    them).  ``broadcast_stats``: True forces the broadcast hint (the
-    caller asserts bounded group cardinality), False forces shuffle
-    joins, None (default) decides from catalog statistics when the
-    cost model has them — fully lazy, no job — and otherwise runs a
-    guard job so high group cardinality can never be silently
-    broadcast.
-
-    Default-mode decision order (VERDICT r11 item 7):
-
-    1. **Catalyst stats, lazy**: if the optimized plan carries a CBO
-       row-count estimate (ANALYZE'd catalog tables — the normal state
-       of a curated 100 TB warehouse), compare it to the bound with a
-       2x safety margin (NDV sketches err ~5%; the margin keeps an
-       underestimate from broadcasting a table near the driver-memory
-       edge) and skip the guard job AND the persist entirely.
-    2. **Guard count, eager** (ADVICE r8): otherwise the guard job
-       runs at plan-construction time, and because ``limit`` cannot
-       short-circuit the underlying groupBy aggregate it costs one
-       full stats-scale aggregation.  To keep that the ONLY
-       stats-scale scan, the stats DataFrame is persisted
-       (``track_persist`` under ``label`` — pass a caller/column-
-       specific label so interleaved operators don't evict each other)
-       before the guard count, so the downstream joins reuse the
-       cached partitions instead of recomputing the aggregation."""
-    if bound is None:
-        bound = BROADCAST_GROUP_BOUND
-    if broadcast_stats is None:
-        est = _catalyst_group_count(stats)
-        if est is not None:
-            # stats-available fast path: decide from metadata alone.
-            # 2x margin: broadcast only when the ESTIMATE clears half
-            # the bound, so a typical NDV error cannot push a
-            # should-shuffle table into the broadcast.
-            return F.broadcast if 2 * est <= bound else (lambda d: d)
-    if broadcast_stats is None:
-        from nyc_taxi_data_clickhouse_spark.scratch import track_persist
-
-        # persist() returns self, so the caller's subsequent joins on
-        # this same DataFrame object hit the cache populated here.
-        # The label carries the analyzed plan's semantic hash: two
-        # DIFFERENT stats plans (other df / other qs) never evict each
-        # other mid-use, while re-running the same operator on the same
-        # input reuses one slot.  Growth across MANY distinct inputs is
-        # bounded too (ADVICE r8): track_persist caps live slots per
-        # label prefix at scratch.MAX_SLOTS_PER_PREFIX, evicting the
-        # oldest — safe because eviction can only hit plans from prior
-        # invocations, whose guard count and downstream joins have
-        # already consumed the cache.
-        sem = stats._jdf.queryExecution().analyzed().semanticHash()
-        stats = track_persist(f"{label}:{sem}", stats)
-        broadcast_stats = stats.limit(bound + 1).count() <= bound
-    return F.broadcast if broadcast_stats else (lambda d: d)
+from nyc_taxi_data_clickhouse_spark import partitioning
 
 
 def exact_group_median(
@@ -152,7 +67,8 @@ def exact_group_median(
     (less pass-2 data) but a bigger sketch.
 
     ``broadcast_stats``: True = hint-broadcast the per-group side
-    tables (caller asserts group cardinality ≤ BROADCAST_GROUP_BOUND),
+    tables (caller asserts group cardinality ≤
+    ``partitioning.BROADCAST_GROUP_BOUND``),
     False = shuffle joins, None = one cheap guard job decides.
     """
     delta = 4.0 / accuracy
@@ -175,15 +91,16 @@ def exact_group_median(
     # copy (sketch-only / count-only / keys-only), so without a persist
     # each reference re-aggregates the full fact table — 3 fact passes
     # for one group-cardinality result.  The guard path of
-    # _group_table_hint already persists for its count; do the same on
-    # the caller-asserted paths (True/False), where the guard never
-    # runs.  Group-cardinality rows only — cache-tier sized at 100 TB.
+    # partitioning.group_table_hint already persists for its count; do
+    # the same on the caller-asserted paths (True/False), where the
+    # guard never runs.  Group-cardinality rows only — cache-tier sized
+    # at 100 TB.
     if broadcast_stats is not None:
         from nyc_taxi_data_clickhouse_spark.scratch import track_persist
 
         sem = stats._jdf.queryExecution().analyzed().semanticHash()
         stats = track_persist(f"median_stats:{grp}:{col}:{sem}", stats)
-    hint = _group_table_hint(
+    hint = partitioning.group_table_hint(
         stats, broadcast_stats, label=f"median_stats:{grp}:{col}"
     )
     j = df.select(grp, col).join(hint(stats), grp)
@@ -353,7 +270,7 @@ def exact_group_quantiles(
 
         sem = stats._jdf.queryExecution().analyzed().semanticHash()
         stats = track_persist(f"quantiles_stats:{grp}:{col}:{sem}", stats)
-    hint = _group_table_hint(
+    hint = partitioning.group_table_hint(
         stats, broadcast_stats, label=f"quantiles_stats:{grp}:{col}"
     )
     j = df.select(grp, col).join(hint(stats), grp)

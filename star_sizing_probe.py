@@ -5,7 +5,7 @@
 ``connected_components_star`` sizes each round's group/join exchanges
 from the fixpoint fingerprint's exact edge count
 (``operators/dedup.py`` round loop; ``partitioning.
-sized_partitions_for_rows(2*n_edges, 48 B)``).  The control engages
+sized_partitions_for_rows(2*n_edges, STAR_BYTES_PER_EDGE)``, 48 B).  The control engages
 only past ~45 M edges at 32 cores x 128 MB — a code path the salted
 document probes (~1.3 M docs, edge counts under the 200 k local-finish
 bound) can never reach.  This harness builds SYNTHETIC graphs past the
@@ -96,8 +96,8 @@ def main() -> None:
     orig_sizer = partitioning.sized_partitions_for_rows
     derived_log: list[int | None] = []
 
-    def recording_sizer(n_rows, bytes_per_row, sp, **kw):
-        n = orig_sizer(n_rows, bytes_per_row, sp, **kw)
+    def recording_sizer(n_rows, bytes_per_row, sp):
+        n = orig_sizer(n_rows, bytes_per_row, sp)
         derived_log.append(n)
         return n
 

@@ -7,6 +7,7 @@ import pytest
 import random
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_clickhouse_spark import partitioning
 from nyc_taxi_data_clickhouse_spark.operators import dedup, similarity, text
 from tests.conftest import SF_SMOKE
 
@@ -1019,16 +1020,17 @@ def test_star_hybrid_finish_matches_pure_star(spark):
 
 
 def test_star_shuffle_hash_gate_labels_identically(spark, monkeypatch):
-    """The r8 join-strategy gate: above _STAR_SHJ_EDGE_BOUND the round
+    """The r8 join-strategy gate: above STAR_SHJ_EDGE_BOUND the round
     joins hint shuffle_hash (the un-hinted fallback at that size is
     sort-merge, which sorts both sides every round; the min tables
-    have unique keys, the safe build case).  Forcing the gate ON via
-    the env override must leave labels identical to the un-hinted
+    have unique keys, the safe build case).  Forcing the gate ON with
+    a zero bound must leave labels identical to the un-hinted
     rounds on graphs of different shapes — and the hinted join must
     actually plan as ShuffledHashJoin (checked on the round-join shape
     directly, since per-round plans are checkpoint-truncated from the
     returned DataFrame)."""
-    monkeypatch.setenv("SPARK_GRAFT_STAR_SHJ_BOUND", "0")  # always hint
+    bound = partitioning.STAR_SHJ_EDGE_BOUND
+    monkeypatch.setattr(partitioning, "STAR_SHJ_EDGE_BOUND", 0)  # always hint
     rng = random.Random(11)
     for pairs in (
         spark.createDataFrame(
@@ -1045,7 +1047,7 @@ def test_star_shuffle_hash_gate_labels_identically(spark, monkeypatch):
                 pairs, local_finish_edges=0
             ).collect()
         }
-        monkeypatch.delenv("SPARK_GRAFT_STAR_SHJ_BOUND")
+        monkeypatch.setattr(partitioning, "STAR_SHJ_EDGE_BOUND", bound)
         # local_finish_edges=0 on the baseline too (ADVICE r8): without
         # it these <=150-edge graphs short-circuit to the union-find
         # local finish and never execute the UN-hinted star rounds —
@@ -1057,7 +1059,7 @@ def test_star_shuffle_hash_gate_labels_identically(spark, monkeypatch):
                 pairs, local_finish_edges=0
             ).collect()
         }
-        monkeypatch.setenv("SPARK_GRAFT_STAR_SHJ_BOUND", "0")
+        monkeypatch.setattr(partitioning, "STAR_SHJ_EDGE_BOUND", 0)
         assert hinted == plain
     # plan shape of the hinted round-join composition
     e = spark.createDataFrame(

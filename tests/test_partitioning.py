@@ -160,6 +160,33 @@ def test_calibrated_jaccard_gate_disengages_small_input(spark):
     assert dedup._calibrated_jaccard_partitions(docs, "text", "doc_id", 3) is None
 
 
+def test_minhash_probe_gate_scales_with_bytes_per_shingle(spark, monkeypatch):
+    """The static gate in front of the two eager probe jobs scales
+    jaccard's expansion by bytes_per_shingle / 1024 (32x for minhash's
+    128 B), so minhash skips the probe wherever its width could not
+    clear the session default.  At 8 MiB of docs and 4 session
+    partitions jaccard's gate engages (8 MiB x 256 / 128 MiB = 16) and
+    minhash's does not (2)."""
+    assert partitioning.session_shuffle_partitions(spark) == 4
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    monkeypatch.setattr(partitioning, "plan_size_bytes", lambda df: 8 << 20)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_started(**kw):
+        before = len(tracker.getJobIdsForGroup(None))
+        width = dedup._calibrated_jaccard_partitions(
+            docs, "text", "doc_id", 3, **kw
+        )
+        return width, len(tracker.getJobIdsForGroup(None)) - before
+
+    minhash = jobs_started(
+        bytes_per_shingle=partitioning.MINHASH_SORT_BYTES_PER_SHINGLE
+    )
+    assert minhash == (None, 0)
+    _, jaccard_jobs = jobs_started()
+    assert jaccard_jobs > 0
+
+
 def test_cpu_map_min_partitions_engages_below_core_count(spark):
     """A one-row-group id projection must be widened for the Python
     codec stage; an input already at/above core width must be left
@@ -168,7 +195,7 @@ def test_cpu_map_min_partitions_engages_below_core_count(spark):
     cores = spark.sparkContext.defaultParallelism
     n = partitioning.cpu_map_min_partitions(docs)
     assert docs.rdd.getNumPartitions() < cores  # the starved shape
-    assert n == cores  # default fanout=1: one wave, no extra task cost
+    assert n == cores  # one wave, no extra task cost
     # already parallel -> no exchange added
     wide = docs.repartition(cores)
     assert partitioning.cpu_map_min_partitions(wide) is None
@@ -203,12 +230,14 @@ def test_cpu_map_target_partitions_knob_overrides_default_parallelism(spark):
             str(docs.rdd.getNumPartitions()),
         )
         assert partitioning.cpu_map_min_partitions(docs) is None
-        # a malformed knob degrades to the defaultParallelism probe —
-        # LOUDLY (ADVICE r14): the silent-fallback path was exactly the
-        # misconfiguration the knob exists to surface
+        # a malformed knob fails by name: a silent fallback to the
+        # probe would hide exactly the misconfiguration the knob
+        # exists to surface
         spark.conf.set("spark.graft.cpuMapTargetPartitions", "not-a-number")
-        with pytest.warns(UserWarning, match="cpuMapTargetPartitions"):
-            assert partitioning.cpu_map_min_partitions(docs) == cores
+        with pytest.raises(
+            ValueError, match="cpuMapTargetPartitions.*'not-a-number'"
+        ):
+            partitioning.cpu_map_min_partitions(docs)
     finally:
         spark.conf.unset("spark.graft.cpuMapTargetPartitions")
     # unset again: the local default path is the plain core probe

@@ -152,8 +152,9 @@ def test_plan_invariants(spark, name, spec):
 @pytest.mark.parametrize("mode", ["default", "asserted"])
 def test_broadcast_gate_plan_shape(spark, monkeypatch, op_kind, mode):
     import nyc_taxi_data_clickhouse_spark.operators.stats as stats_mod
+    from nyc_taxi_data_clickhouse_spark import partitioning
 
-    monkeypatch.setattr(stats_mod, "BROADCAST_GROUP_BOUND", 10)
+    monkeypatch.setattr(partitioning, "BROADCAST_GROUP_BOUND", 10)
     # Disable SIZE-based broadcasts (static + AQE) so the only possible
     # BroadcastHashJoin source is the gate's HINT — otherwise the
     # planner, seeing the guard-persisted stats' accurate tiny size,
@@ -219,7 +220,7 @@ def _run_broadcast_gate_case(spark, stats_mod, op_kind, mode):
 @pytest.mark.parametrize("op_name", ["quality_percentile_by_domain",
                                      "domain_mix_temperature"])
 def test_selection_broadcast_gate_plan_shape(spark, monkeypatch, op_name):
-    import nyc_taxi_data_clickhouse_spark.operators.stats as stats_mod
+    from nyc_taxi_data_clickhouse_spark import partitioning
     from nyc_taxi_data_clickhouse_spark.operators.corpus_ops import (
         domain_mix_temperature,
     )
@@ -252,7 +253,7 @@ def test_selection_broadcast_gate_plan_shape(spark, monkeypatch, op_name):
 
         # force the guard over the bound: every non-empty side table
         # exceeds a zero bound, so default mode must fall back
-        monkeypatch.setattr(stats_mod, "BROADCAST_GROUP_BOUND", 0)
+        monkeypatch.setattr(partitioning, "BROADCAST_GROUP_BOUND", 0)
         above = op(spark, SF_SMOKE, broadcast_side=None)
         plan = physical(above)
         assert "BroadcastHashJoin" not in plan, plan[:1500]

@@ -10,6 +10,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_clickhouse_spark import partitioning
 from nyc_taxi_data_clickhouse_spark.operators.round12_ops import (
     _KNUTH,
     aes_key,
@@ -74,7 +75,7 @@ def test_pagerank_mass_conserved_and_cycle_uniform(spark):
         assert r["pr"] == pytest.approx(0.25, abs=1e-12)
 
 
-def test_pagerank_join_gate_plan_shape(spark):
+def test_pagerank_join_gate_plan_shape(spark, monkeypatch):
     """Below the node-count gate the per-iteration joins broadcast the
     rank-vector side; above it they are shuffled-hash with ranks as
     the build side — never a per-iteration sort of the edge list.
@@ -117,10 +118,12 @@ def test_pagerank_join_gate_plan_shape(spark):
     assert "ShuffledHashJoin" in shj_plan
     assert "SortMergeJoin" not in shj_plan
     # value parity across the gate
-    lo = {
-        r["node"]: round(r["pr"], 9)
-        for r in pagerank(edges, rank_broadcast_bound=1).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(partitioning, "BROADCAST_GROUP_BOUND", 1)
+        lo = {
+            r["node"]: round(r["pr"], 9)
+            for r in pagerank(edges).collect()
+        }
     hi = {
         r["node"]: round(r["pr"], 9)
         for r in pagerank(edges).collect()
@@ -536,7 +539,7 @@ def test_pcm_wav_path_unaffected():
     assert out["n_samples"] == 4 and out["abs_sum"] == 492
 
 
-def test_triangle_join_gate_plan_shape(spark):
+def test_triangle_join_gate_plan_shape(spark, monkeypatch):
     """Below the node-count gate the degree and probe joins broadcast;
     above it they are shuffled-hash — never sort-merge (checkpointed
     frames report huge stats, which un-gated would sort-merge even a
@@ -546,9 +549,8 @@ def test_triangle_join_gate_plan_shape(spark):
     lo_plan = lo_df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in lo_plan
     assert "BroadcastHashJoin" in lo_plan
-    hi_df = triangle_count(
-        _edges(spark, k4, cols=("a", "b")), node_broadcast_bound=1
-    )
+    monkeypatch.setattr(partitioning, "BROADCAST_GROUP_BOUND", 1)
+    hi_df = triangle_count(_edges(spark, k4, cols=("a", "b")))
     hi_plan = hi_df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in hi_plan
     assert "ShuffledHashJoin" in hi_plan

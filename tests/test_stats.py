@@ -195,9 +195,9 @@ def test_broadcast_gate_high_cardinality_no_broadcast(spark, monkeypatch):
     """VERDICT r6 item 3: above the group-count bound the per-group
     side tables must NOT be broadcast — the joins fall back to shuffle
     joins, and the result stays exact."""
-    import nyc_taxi_data_clickhouse_spark.operators.stats as stats_mod
+    from nyc_taxi_data_clickhouse_spark import partitioning
 
-    monkeypatch.setattr(stats_mod, "BROADCAST_GROUP_BOUND", 10)
+    monkeypatch.setattr(partitioning, "BROADCAST_GROUP_BOUND", 10)
     rng = random.Random(7)
     # 40 groups > bound of 10 -> guard must refuse the broadcast
     rows = [(g, rng.uniform(0, 100)) for g in range(40) for _ in range(9)]
@@ -265,10 +265,10 @@ def test_catalog_stats_path_is_lazy_and_decides_both_ways(spark, monkeypatch, tm
     row-count estimate (ANALYZE'd catalog table + spark.sql.cbo.enabled)
     the default-mode gate decides from metadata alone — NO guard job,
     NO persist — and still lands on the right side of the bound."""
-    import nyc_taxi_data_clickhouse_spark.operators.stats as stats_mod
-    from nyc_taxi_data_clickhouse_spark.operators.stats import (
+    from nyc_taxi_data_clickhouse_spark import partitioning
+    from nyc_taxi_data_clickhouse_spark.partitioning import (
         _catalyst_group_count,
-        _group_table_hint,
+        group_table_hint,
     )
 
     saved = spark.conf.get("spark.sql.cbo.enabled", "false")
@@ -288,7 +288,7 @@ def test_catalog_stats_path_is_lazy_and_decides_both_ways(spark, monkeypatch, tm
 
         tracker = spark.sparkContext.statusTracker()
         before = len(tracker.getJobIdsForGroup(None))
-        hint = _group_table_hint(stats, None)  # default mode
+        hint = group_table_hint(stats, None)  # default mode
         after = len(tracker.getJobIdsForGroup(None))
         assert after == before, "stats-available path must run NO job"
         # 7 groups, bound 500k -> broadcast side of the gate
@@ -296,9 +296,9 @@ def test_catalog_stats_path_is_lazy_and_decides_both_ways(spark, monkeypatch, tm
 
         # same metadata, bound forced below the estimate -> shuffle side,
         # still without running a job
-        monkeypatch.setattr(stats_mod, "BROADCAST_GROUP_BOUND", 1)
+        monkeypatch.setattr(partitioning, "BROADCAST_GROUP_BOUND", 1)
         before = len(tracker.getJobIdsForGroup(None))
-        hint_above = _group_table_hint(stats, None)
+        hint_above = group_table_hint(stats, None)
         after = len(tracker.getJobIdsForGroup(None))
         assert after == before
         assert hint_above is not F.broadcast
