@@ -1,10 +1,11 @@
 """Cross-corpus curation operators (SURVEY §7 extension scope).
 
-Round-2 additions beyond the per-document signals in text.py /
-analysis.py: the operations that look ACROSS documents or ACROSS
-corpus snapshots — incremental dedup against an existing corpus,
-cross-document boilerplate detection, stratified rebalancing,
-character-entropy quality scoring — plus two engine-surface gaps
+Beyond the per-document signals in text.py / analysis.py: the
+operations that look ACROSS documents or ACROSS corpus snapshots —
+incremental dedup against an existing corpus, cross-document
+boilerplate detection, stratified rebalancing, character-entropy
+quality scoring, event-sequence and snapshot analytics (retention
+cohorts, transition counts, CDC diff) — plus two engine-surface gaps
 (explicit salted skew join, cogrouped applyInPandas).
 
 All entries are driver-oracle-gated (exact SQL twin in DuckDB).
@@ -13,7 +14,7 @@ All entries are driver-oracle-gated (exact SQL twin in DuckDB).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_clickhouse_spark.operators.dedup import (
@@ -153,8 +154,10 @@ _STRATA_RATES = {"en": 40, "fr": 75}
     "materializes separately",
 )
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nyc_taxi_data_clickhouse_spark.operators.selection import doc_bucket
+
     docs = load_table(spark, sf_dir, "documents")
-    bucket = ((F.col("doc_id") % 1000003) * F.lit(2654435761)) % 100
+    bucket = doc_bucket("doc_id")
     rate = F.lit(100)
     for lang, r in _STRATA_RATES.items():
         rate = F.when(F.col("lang") == lang, r).otherwise(rate)
@@ -213,8 +216,7 @@ def domain_mix_temperature(
     *,
     broadcast_side: bool | None = None,
 ) -> DataFrame:
-    from pyspark.sql import Window
-
+    from nyc_taxi_data_clickhouse_spark.operators.selection import doc_bucket
     from nyc_taxi_data_clickhouse_spark.partitioning import group_table_hint
 
     docs = load_table(spark, sf_dir, "documents")
@@ -230,7 +232,7 @@ def domain_mix_temperature(
         .cast("int")
         .alias("rate"),
     )
-    bucket = ((F.col("doc_id") % 1000003) * F.lit(2654435761)) % 100
+    bucket = doc_bucket("doc_id")
     # per-domain side table: unbounded cardinality on a real crawl, so
     # the broadcast is count-gated with a shuffle-join fallback
     hint = group_table_hint(rates, broadcast_side, label="domain_mix_rates")
@@ -411,6 +413,118 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("week_offset"),
         )
         .agg(F.count("*").alias("n_active"))
+    )
+
+
+@register(
+    "event_transition_counts",
+    """
+    WITH seq AS (
+      SELECT user_id, ts, event_type,
+             lag(event_type) OVER (PARTITION BY user_id
+                                   ORDER BY ts, event_id) AS prev_type,
+             lag(ts) OVER (PARTITION BY user_id
+                           ORDER BY ts, event_id) AS prev_ts
+      FROM events)
+    SELECT prev_type AS from_type, event_type AS to_type,
+           count(*) AS n,
+           round(avg(epoch_us(ts) - epoch_us(prev_ts)) / 1e6, 3)
+             AS avg_gap_s
+    FROM seq WHERE prev_type IS NOT NULL
+    GROUP BY from_type, to_type
+    """,
+    doc="§7 sequence mining: per-user event-transition (Markov "
+    "bigram) matrix with mean inter-event gap.  lag over "
+    "(user_id | ts, event_id) — the unique event_id tiebreak makes "
+    "the sequence deterministic.  One shuffle to sort each user's "
+    "history (state stays bounded per user), one hash-agg over the "
+    "≤|types|² matrix; at 100 TB this is the sessionize partitioning "
+    "reused — never a self-join on the event table",
+)
+def event_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_events(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = ev.select(
+        "user_id",
+        "ts",
+        "event_type",
+        F.lag("event_type").over(w).alias("from_type"),
+        F.lag("ts").over(w).alias("prev_ts"),
+    ).filter(F.col("from_type").isNotNull())
+    # ts may surface as TIMESTAMP_NTZ (parquet us) — normalize to
+    # epoch micros; the diff is tz-invariant
+    gap_s = (
+        F.unix_micros(F.col("ts").cast("timestamp"))
+        - F.unix_micros(F.col("prev_ts").cast("timestamp"))
+    ) / 1e6
+    return seq.groupBy(
+        "from_type", F.col("event_type").alias("to_type")
+    ).agg(
+        F.count("*").alias("n"),
+        F.round(F.avg(gap_s), 3).alias("avg_gap_s"),
+    )
+
+
+@register(
+    "snapshot_diff",
+    """
+    WITH v1 AS (
+      SELECT o_orderkey, o_totalprice AS price FROM orders
+      WHERE o_orderkey % 3 <> 0),
+    v2 AS (
+      SELECT o_orderkey,
+             CASE WHEN o_orderkey % 5 = 0
+                  THEN o_totalprice + 10.0
+                  ELSE o_totalprice END AS price
+      FROM orders WHERE o_orderkey % 4 <> 0)
+    SELECT coalesce(v1.o_orderkey, v2.o_orderkey) AS o_orderkey,
+           CASE WHEN v1.o_orderkey IS NULL THEN 'insert'
+                WHEN v2.o_orderkey IS NULL THEN 'delete'
+                ELSE 'update' END AS action,
+           v1.price AS old_price, v2.price AS new_price
+    FROM v1 FULL OUTER JOIN v2 ON v1.o_orderkey = v2.o_orderkey
+    WHERE v1.o_orderkey IS NULL OR v2.o_orderkey IS NULL
+          OR v1.price <> v2.price
+    """,
+    doc="§7 pipeline CDC: snapshot diff between two table versions — "
+    "emit insert/delete/update actions from a keyed full outer join, "
+    "suppressing unchanged rows.  At 100 TB both snapshots are "
+    "bucketed by key so the diff is a co-located sort-merge join with "
+    "no shuffle, and a per-row content hash replaces column-wise "
+    "comparison when rows are wide; unchanged partitions are skipped "
+    "entirely via partition-level content hashes",
+)
+def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    v1 = orders.filter(F.col("o_orderkey") % 3 != 0).select(
+        "o_orderkey", F.col("o_totalprice").alias("price")
+    )
+    v2 = orders.filter(F.col("o_orderkey") % 4 != 0).select(
+        "o_orderkey",
+        F.when(
+            F.col("o_orderkey") % 5 == 0,
+            F.col("o_totalprice") + 10.0,
+        )
+        .otherwise(F.col("o_totalprice"))
+        .alias("price"),
+    )
+    j = v1.alias("v1").join(
+        v2.alias("v2"),
+        F.col("v1.o_orderkey") == F.col("v2.o_orderkey"),
+        "full_outer",
+    )
+    old_key, new_key = F.col("v1.o_orderkey"), F.col("v2.o_orderkey")
+    old_price, new_price = F.col("v1.price"), F.col("v2.price")
+    return j.select(
+        F.coalesce(old_key, new_key).alias("o_orderkey"),
+        F.when(old_key.isNull(), F.lit("insert"))
+        .when(new_key.isNull(), F.lit("delete"))
+        .otherwise(F.lit("update"))
+        .alias("action"),
+        old_price.alias("old_price"),
+        new_price.alias("new_price"),
+    ).filter(
+        old_key.isNull() | new_key.isNull() | (old_price != new_price)
     )
 
 

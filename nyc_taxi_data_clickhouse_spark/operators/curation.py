@@ -1,5 +1,6 @@
-"""Round-9 surface extensions — crawl/curation primitives a 100 TB
-training-data pipeline runs before anything else touches the text.
+"""Curation primitives a 100 TB training-data pipeline runs before
+anything else touches the text: PII redaction, URL canonicalization
+and rule-attributed quality filtering.
 
 - ``pii_scrub``: regex PII detection + redaction (emails, full-form
   IPv6, IPv4s, IBAN-shaped account ids, 4-4-4-4 card numbers with a
@@ -25,9 +26,17 @@ training-data pipeline runs before anything else touches the text.
   canonical form.  Pure string/array built-ins (split, higher-order
   filter, array_sort, array_join); the dedup after canonicalization is
   one hash aggregation, the same scale shape as ``exact_dedup``.
+- ``quality_rule_filter``: Gopher-style composite quality rules
+  (word-count bounds, mean-word-length bounds, stopword floor, symbol
+  ceiling, duplicate-token ceiling) with PER-RULE attribution flags,
+  the filter-stage complement of ``text_quality``'s scoring.  Every
+  threshold is evaluated by integer cross-multiplication
+  (``sw * 100 >= wc * 5`` instead of ``sw/wc >= 0.05``), so the
+  verdicts are exact in both engines with no float-comparison edge.
+  Map-only: one pass, no shuffle, no UDF.
 
 Reference: no analog (the reference's 9-line trans.py has no text
-surface — SURVEY §0); both entries are DuckDB-oracle-gated with the
+surface — SURVEY §0); every entry is DuckDB-oracle-gated with the
 oracle restating the identical normalization in DuckDB's dialect.
 """
 
@@ -36,6 +45,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_clickhouse_spark.operators.text import (
+    WHITESPACE,
+    nonspace_length,
+    tokens,
+)
 from nyc_taxi_data_clickhouse_spark.suite import load_table, register
 
 # PII patterns — Java/RE2-identical subset only (see module docstring).
@@ -176,7 +190,7 @@ def _inject_pii(docs: DataFrame) -> DataFrame:
         F.lit(" ssn 123-45-"), F.lpad((i % 10000).cast("string"), 4, "0"),
         F.lit(" tel 555-"), F.lpad((i % 1000).cast("string"), 3, "0"),
         F.lit("-"), F.lpad(((i * 3) % 10000).cast("string"), 4, "0"),
-        # round-10 arms: full-form IPv6, 4-4-4-4 card (Luhn validity
+        # further arms: full-form IPv6, 4-4-4-4 card (Luhn validity
         # varies with doc_id), IBAN-shaped account id
         F.lit(" v6 2001:0db8:85a3:0000:0000:8a2e:0370:"),
         F.lpad((i % 10000).cast("string"), 4, "0"),
@@ -196,13 +210,7 @@ def _scrub_report(base: DataFrame) -> DataFrame:
     )
     return base.select(
         "doc_id",
-        counts["email"].alias("n_email"),
-        counts["ipv6"].alias("n_ipv6"),
-        counts["ip"].alias("n_ip"),
-        counts["iban"].alias("n_iban"),
-        counts["cc"].alias("n_cc"),
-        counts["ssn"].alias("n_ssn"),
-        counts["phone"].alias("n_phone"),
+        *(n.alias(f"n_{kind}") for kind, n in counts.items()),
         luhn_valid(first_cc).alias("cc_luhn_valid"),
         scrubbed.alias("scrubbed"),
     )
@@ -412,4 +420,96 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canon.groupBy("canon_url").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.min("doc_id").alias("first_doc"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# rule-attributed quality filter (Gopher-style)
+# ---------------------------------------------------------------------------
+
+_TOKS_SQL = r"string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+')"
+_STOPLIST_SQL = "['the', 'and', 'of', 'to', 'a', 'in', 'is', 'it', 'for', 'on']"
+
+#: rule thresholds (integer cross-multiplied, see module doc)
+_WC_MIN, _WC_MAX = 20, 90          # word-count bounds
+_MWL_MIN, _MWL_MAX = 3, 10         # mean word length bounds (chars/word)
+_STOP_PCT = 5                      # stopword ratio floor, percent
+_SYM_PCT = 10                      # symbols-per-word ceiling, percent
+_DUP_PCT = 60                      # duplicate-token fraction ceiling, percent
+
+
+@register(
+    "quality_rule_filter",
+    f"""
+    WITH f AS (
+      SELECT doc_id,
+             CAST(len({_TOKS_SQL}) AS BIGINT) AS wc,
+             CAST(len(list_distinct({_TOKS_SQL})) AS BIGINT) AS dc,
+             CAST(len(list_filter({_TOKS_SQL},
+                  t -> list_contains({_STOPLIST_SQL}, t))) AS BIGINT) AS sw,
+             CAST(length(regexp_replace(trim(text),
+                  '[ \\t\\n\\x0B\\f\\r]+', '', 'g')) AS BIGINT) AS nonsp,
+             CAST(length(regexp_replace(text,
+                  '[A-Za-z0-9 \\t\\n\\x0B\\f\\r]', '', 'g')) AS BIGINT) AS sym
+      FROM documents WHERE length(trim(text)) > 0)
+    SELECT doc_id, wc,
+           (wc BETWEEN {_WC_MIN} AND {_WC_MAX}) AS r_word_count,
+           (nonsp >= {_MWL_MIN} * wc AND nonsp <= {_MWL_MAX} * wc)
+               AS r_mean_word_len,
+           (sw * 100 >= {_STOP_PCT} * wc) AS r_stopwords,
+           (sym * 100 <= {_SYM_PCT} * wc) AS r_symbols,
+           ((wc - dc) * 100 <= {_DUP_PCT} * wc) AS r_dup_tokens,
+           ((wc BETWEEN {_WC_MIN} AND {_WC_MAX})
+            AND nonsp >= {_MWL_MIN} * wc AND nonsp <= {_MWL_MAX} * wc
+            AND sw * 100 >= {_STOP_PCT} * wc
+            AND sym * 100 <= {_SYM_PCT} * wc
+            AND (wc - dc) * 100 <= {_DUP_PCT} * wc) AS keep
+    FROM f
+    """,
+    doc="§7 quality: Gopher-style composite rule filter (Rae et al. "
+    "2021 §A1.1 shape) with per-rule attribution — word-count bounds "
+    "[20, 90], mean word length [3, 10] chars, stopword ratio >= 5%, "
+    "symbol-to-word ratio <= 10%, duplicate-token fraction <= 60%; "
+    "keep = all five.  Every threshold is an integer "
+    "cross-multiplication (sw*100 >= 5*wc), never a float ratio, so "
+    "verdicts are bit-exact cross-engine.  Map-only JVM built-ins: one "
+    "pass, zero shuffle, zero UDF — the filter stage composes with "
+    "token_budget_selection / domain mixing downstream.",
+)
+def quality_rule_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.length(F.trim("text")) > 0
+    )
+    toks = tokens("text")
+    stop = F.array([F.lit(s) for s in
+                    ("the", "and", "of", "to", "a", "in", "is", "it",
+                     "for", "on")])
+    pre = docs.select(
+        "doc_id",
+        F.size(toks).cast("long").alias("wc"),
+        F.size(F.array_distinct(toks)).cast("long").alias("dc"),
+        F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
+        .cast("long")
+        .alias("sw"),
+        nonspace_length("text").cast("long").alias("nonsp"),
+        F.length(
+            F.regexp_replace("text", f"[A-Za-z0-9{WHITESPACE}]", "")
+        ).cast("long").alias("sym"),
+    )
+    r_wc = F.col("wc").between(_WC_MIN, _WC_MAX)
+    r_mwl = (F.col("nonsp") >= _MWL_MIN * F.col("wc")) & (
+        F.col("nonsp") <= _MWL_MAX * F.col("wc")
+    )
+    r_stop = F.col("sw") * 100 >= _STOP_PCT * F.col("wc")
+    r_sym = F.col("sym") * 100 <= _SYM_PCT * F.col("wc")
+    r_dup = (F.col("wc") - F.col("dc")) * 100 <= _DUP_PCT * F.col("wc")
+    return pre.select(
+        "doc_id",
+        "wc",
+        r_wc.alias("r_word_count"),
+        r_mwl.alias("r_mean_word_len"),
+        r_stop.alias("r_stopwords"),
+        r_sym.alias("r_symbols"),
+        r_dup.alias("r_dup_tokens"),
+        (r_wc & r_mwl & r_stop & r_sym & r_dup).alias("keep"),
     )

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_clickhouse_spark import partitioning
-from nyc_taxi_data_clickhouse_spark.operators.text import tokens
+from nyc_taxi_data_clickhouse_spark.operators.text import WS_RUN, tokens
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -38,7 +38,7 @@ def normalize_text(col: Column | str) -> Column:
     """Canonical form for exact dedup: lowercase, trim, collapse
     internal whitespace."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(F.trim(c)), r"[ \t\n\x0B\f\r]+", " ")
+    return F.regexp_replace(F.lower(F.trim(c)), WS_RUN, " ")
 
 
 def dedup_exact(
@@ -862,7 +862,6 @@ def connected_components_star(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 40,
-    local_finish_edges: int = 200_000,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -882,15 +881,15 @@ def connected_components_star(
     ``RuntimeError`` if ``max_rounds`` passes without a fixpoint
     (cannot happen for max_rounds > ~2 log2 n; guards miswired inputs).
 
-    ``local_finish_edges``: the hybrid finish.  Star rounds contract
-    the edge list geometrically, so the TAIL rounds run the full
-    5-job round machinery over a tiny remnant — pure per-round fixed
-    latency.  Once the edge count is at or below this threshold, one
-    single-task union-find (:func:`_union_find_member`) replaces all
-    remaining rounds: identical labels (min id per component), one job
-    instead of O(log remnant) rounds.  At 100 TB the rounds do the
+    The hybrid finish (``partitioning.STAR_LOCAL_FINISH_EDGES``): star
+    rounds contract the edge list geometrically, so the TAIL rounds run
+    the full 5-job round machinery over a tiny remnant — pure per-round
+    fixed latency.  Once the edge count is at or below that threshold,
+    one single-task union-find (:func:`_union_find_member`) replaces
+    all remaining rounds: identical labels (min id per component), one
+    job instead of O(log remnant) rounds.  At 100 TB the rounds do the
     heavy contraction and the local finish absorbs the latency-bound
-    tail; 0 disables (pure star — used by the round-contract tests).
+    tail.
 
     Checkpoint lifecycle note: each round eagerly localCheckpoints the
     contracted edge list (the standard iterative-Spark pattern — it
@@ -921,8 +920,9 @@ def connected_components_star(
             "node", F.coalesce("component", F.col("node")).alias("component")
         )
 
+    finish_edges = partitioning.STAR_LOCAL_FINISH_EDGES
     n_edges = edges.count()  # cheap: edges is eagerly checkpointed
-    if local_finish_edges and n_edges <= local_finish_edges:
+    if finish_edges and n_edges <= finish_edges:
         return finish_local(edges)
     prev_fp = None
     for _ in range(max_rounds):
@@ -998,7 +998,7 @@ def connected_components_star(
                 "node", F.coalesce("component", F.col("node")).alias("component")
             )
         # hybrid finish: fp already carries the post-round edge count
-        if local_finish_edges and fp[0] <= local_finish_edges:
+        if finish_edges and fp[0] <= finish_edges:
             return finish_local(edges)
         prev_fp = fp
     raise RuntimeError(

@@ -1,7 +1,6 @@
-"""Round-12 surface extensions — graph analytics over interaction
-data, principled weighted sampling, and rule-attributed quality
-filtering: the remaining standard stages of a 100 TB training-data
-pipeline that the registry did not yet cover.
+"""Graph analytics over interaction data: PageRank, triangle counting
+and label propagation, each a fixed chain of equi-joins and hash
+aggregations — no collect of a vertex table, no cartesian.
 
 - ``graph_pagerank``: fixed-iteration PageRank over the user->item
   interaction graph derived from ``events`` (edge = user clicked item
@@ -26,25 +25,6 @@ pipeline that the registry did not yet cover.
   (community detection) — per iteration one (node, label) hash agg
   plus an argmin-by-struct re-aggregation, never a per-node window
   sort.
-- ``weighted_sample_topk``: deterministic weighted sampling WITHOUT
-  replacement (Efraimidis & Spirakis 2006, "Weighted random sampling
-  with a reservoir": draw key u_i^(1/w_i), take the top k).  The
-  uniform comes from a Knuth multiplicative hash of the id — no RNG
-  state, so the sample is reproducible and the oracle can restate it.
-  The top-k is ``ORDER BY key LIMIT k``, which Spark executes as
-  TakeOrderedAndProject (per-partition heaps + driver merge of k rows
-  per partition) — never a global sort of the corpus.
-- ``weighted_sample_per_domain``: the same A-ES key ranked within
-  each source domain (domain-capped selection — "no domain may
-  dominate the mix"), one shuffle on the domain key.
-- ``quality_rule_filter``: Gopher-style composite quality rules
-  (word-count bounds, mean-word-length bounds, stopword floor, symbol
-  ceiling, duplicate-token ceiling) with PER-RULE attribution flags,
-  the filter-stage complement of ``text_quality``'s scoring.  Every
-  threshold is evaluated by integer cross-multiplication
-  (``sw * 100 >= wc * 5`` instead of ``sw/wc >= 0.05``), so the
-  verdicts are exact in both engines with no float-comparison edge.
-  Map-only: one pass, no shuffle, no UDF.
 
 Reference: no analog (the reference is a 4-query taxi benchmark —
 SURVEY §0); all entries are DuckDB-oracle-gated with the oracle
@@ -55,11 +35,11 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_clickhouse_spark import partitioning
-from nyc_taxi_data_clickhouse_spark.suite import load_events, load_table, register
+from nyc_taxi_data_clickhouse_spark.suite import load_events, register
 
 # ---------------------------------------------------------------------------
 # shared derivations
@@ -542,228 +522,3 @@ def _lpa_oracle_sql(iters: int) -> str:
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_propagation(social_edges(spark, sf_dir))
-
-
-# ---------------------------------------------------------------------------
-# weighted sampling (Efraimidis-Spirakis A-ES)
-# ---------------------------------------------------------------------------
-
-#: Knuth's multiplicative hash constant (2^32 / phi, odd)
-_KNUTH = 2_654_435_761
-_SAMPLE_K = 50
-
-# (id * KNUTH) mod 2^32 computed overflow-safely in int64 (ADVICE r12):
-# the naive product overflows int64 for id > 2^63/KNUTH ~ 3.47e9 —
-# Spark (non-ANSI) wraps silently into negative remainders (u <= 0,
-# NaN keys) while DuckDB raises.  Reduce id mod 2^32 first, then split
-# the 32x32 multiply into 16-bit halves: with x = xh*2^16 + xl,
-#   x*K mod 2^32 = ((xh*K mod 2^16)*2^16 + xl*K mod 2^32) mod 2^32
-# and every intermediate stays below 2^48 — exact in both engines for
-# the FULL int64 id range, so the "reproducible across engines at
-# 100 TB" claim holds past 3.5e9 docs.
-#: pmod(doc_id, 2^32) in SQL — DuckDB's % is sign-preserving while
-#: Spark's pmod is always non-negative, so the restatement must add
-#: the modulus back before reducing again or a negative id would feed
-#: pow() a negative base (NaN) only on the DuckDB side
-_AES_X_SQL = "((doc_id % 4294967296 + 4294967296) % 4294967296)"
-_AES_H_SQL = (
-    f"(((({_AES_X_SQL} // 65536) * 2654435761) % 65536) * 65536"
-    f" + (({_AES_X_SQL} % 65536) * 2654435761) % 4294967296)"
-    " % 4294967296"
-)
-
-
-def aes_hash(id_col: Column) -> Column:
-    """``(id * _KNUTH) mod 2^32`` with no int64 overflow anywhere in
-    the id's range (split 16-bit halves, see module comment)."""
-    x = F.pmod(id_col.cast("long"), F.lit(2**32))
-    xh = F.floor(x / F.lit(65536)).cast("long")
-    xl = x % F.lit(65536)
-    return (
-        (xh * F.lit(_KNUTH)) % F.lit(65536) * F.lit(65536)
-        + (xl * F.lit(_KNUTH)) % F.lit(2**32)
-    ) % F.lit(2**32)
-
-
-def aes_key(id_col: Column | str, weight_col: Column | str) -> Column:
-    """A-ES sampling key ``u^(1/w)`` with ``u`` a deterministic uniform
-    in (0, 1] from a Knuth multiplicative hash of the id.  Taking the
-    top k keys is exactly weighted sampling without replacement with
-    inclusion probability proportional to w (Efraimidis & Spirakis
-    2006).  Hash-derived u means no RNG state: reproducible across
-    retries, partitionings, and engines — and the hash is computed
-    overflow-safely so u stays in (0, 1] for every int64 id."""
-    i = F.col(id_col) if isinstance(id_col, str) else id_col
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    u = (aes_hash(i) + F.lit(1.0)) / F.lit(float(2**32))
-    return F.pow(u, F.lit(1.0) / w)
-
-
-@register(
-    "weighted_sample_topk",
-    f"""
-    SELECT rank, doc_id, n_chars FROM (
-      SELECT row_number() OVER (
-               ORDER BY pow(({_AES_H_SQL} + 1.0)
-                           / 4294967296.0, 1.0 / n_chars) DESC,
-                        doc_id) AS rank,
-             doc_id, n_chars
-      FROM documents WHERE n_chars > 0)
-    WHERE rank <= {_SAMPLE_K}
-    """,
-    doc="§7 sampling: weighted sampling without replacement "
-    "(Efraimidis-Spirakis A-ES): key = u^(1/w), w = n_chars, u a "
-    "Knuth-multiplicative-hash uniform of doc_id — deterministic, no "
-    "RNG state, oracle-restatable.  Top-k is ORDER BY ... LIMIT k, "
-    "which Spark runs as TakeOrderedAndProject (per-partition k-heaps "
-    "+ driver merge of k*partitions rows), NOT a global sort — the "
-    "100 TB-safe shape for any k that fits one machine.  Keys are "
-    "well-separated (corpus gaps >> 1 ulp), so cross-engine libm "
-    "differences cannot reorder the sample.",
-)
-def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    keyed = docs.select(
-        "doc_id", "n_chars", aes_key("doc_id", "n_chars").alias("__key")
-    )
-    top = keyed.orderBy(F.col("__key").desc(), F.col("doc_id")).limit(_SAMPLE_K)
-    w = Window.orderBy(F.col("__key").desc(), F.col("doc_id"))
-    return top.select(
-        F.row_number().over(w).alias("rank"), "doc_id", "n_chars"
-    )
-
-
-_PER_DOMAIN_K = 10
-
-
-@register(
-    "weighted_sample_per_domain",
-    f"""
-    SELECT source, rank, doc_id, n_chars FROM (
-      SELECT source, doc_id, n_chars,
-             row_number() OVER (
-               PARTITION BY source
-               ORDER BY pow(({_AES_H_SQL} + 1.0)
-                           / 4294967296.0, 1.0 / n_chars) DESC,
-                        doc_id) AS rank
-      FROM documents WHERE n_chars > 0)
-    WHERE rank <= {_PER_DOMAIN_K}
-    """,
-    doc="§7 sampling: domain-capped A-ES — the same u^(1/w) key as "
-    "weighted_sample_topk ranked WITHIN each source, keep the top 10 "
-    "per domain (the 'no domain may dominate the mix' selection rule, "
-    "the weighted complement of sample_stratified's proportional "
-    "hash).  One shuffle on the domain key; rank never leaves its "
-    "partition.  At 100 TB a heavy-hitter domain makes one window "
-    "partition large — pre-filter with a per-(domain, input-partition) "
-    "partial top-k before the window if a domain exceeds executor "
-    "memory (same two-phase shape as the exact-median brackets).",
-)
-def weighted_sample_per_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    keyed = docs.select(
-        "source", "doc_id", "n_chars",
-        aes_key("doc_id", "n_chars").alias("__key"),
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.col("__key").desc(), F.col("doc_id")
-    )
-    return (
-        keyed.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _PER_DOMAIN_K)
-        .select("source", "rank", "doc_id", "n_chars")
-    )
-
-
-# ---------------------------------------------------------------------------
-# rule-attributed quality filter (Gopher-style)
-# ---------------------------------------------------------------------------
-
-_TOKS_SQL = r"string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+')"
-_STOPLIST_SQL = "['the', 'and', 'of', 'to', 'a', 'in', 'is', 'it', 'for', 'on']"
-
-#: rule thresholds (integer cross-multiplied, see module doc)
-_WC_MIN, _WC_MAX = 20, 90          # word-count bounds
-_MWL_MIN, _MWL_MAX = 3, 10         # mean word length bounds (chars/word)
-_STOP_PCT = 5                      # stopword ratio floor, percent
-_SYM_PCT = 10                      # symbols-per-word ceiling, percent
-_DUP_PCT = 60                      # duplicate-token fraction ceiling, percent
-
-
-@register(
-    "quality_rule_filter",
-    f"""
-    WITH f AS (
-      SELECT doc_id,
-             CAST(len({_TOKS_SQL}) AS BIGINT) AS wc,
-             CAST(len(list_distinct({_TOKS_SQL})) AS BIGINT) AS dc,
-             CAST(len(list_filter({_TOKS_SQL},
-                  t -> list_contains({_STOPLIST_SQL}, t))) AS BIGINT) AS sw,
-             CAST(length(regexp_replace(trim(text),
-                  '[ \\t\\n\\x0B\\f\\r]+', '', 'g')) AS BIGINT) AS nonsp,
-             CAST(length(regexp_replace(text,
-                  '[A-Za-z0-9 \\t\\n\\x0B\\f\\r]', '', 'g')) AS BIGINT) AS sym
-      FROM documents WHERE length(trim(text)) > 0)
-    SELECT doc_id, wc,
-           (wc BETWEEN {_WC_MIN} AND {_WC_MAX}) AS r_word_count,
-           (nonsp >= {_MWL_MIN} * wc AND nonsp <= {_MWL_MAX} * wc)
-               AS r_mean_word_len,
-           (sw * 100 >= {_STOP_PCT} * wc) AS r_stopwords,
-           (sym * 100 <= {_SYM_PCT} * wc) AS r_symbols,
-           ((wc - dc) * 100 <= {_DUP_PCT} * wc) AS r_dup_tokens,
-           ((wc BETWEEN {_WC_MIN} AND {_WC_MAX})
-            AND nonsp >= {_MWL_MIN} * wc AND nonsp <= {_MWL_MAX} * wc
-            AND sw * 100 >= {_STOP_PCT} * wc
-            AND sym * 100 <= {_SYM_PCT} * wc
-            AND (wc - dc) * 100 <= {_DUP_PCT} * wc) AS keep
-    FROM f
-    """,
-    doc="§7 quality: Gopher-style composite rule filter (Rae et al. "
-    "2021 §A1.1 shape) with per-rule attribution — word-count bounds "
-    "[20, 90], mean word length [3, 10] chars, stopword ratio >= 5%, "
-    "symbol-to-word ratio <= 10%, duplicate-token fraction <= 60%; "
-    "keep = all five.  Every threshold is an integer "
-    "cross-multiplication (sw*100 >= 5*wc), never a float ratio, so "
-    "verdicts are bit-exact cross-engine.  Map-only JVM built-ins: one "
-    "pass, zero shuffle, zero UDF — the filter stage composes with "
-    "token_budget_selection / domain mixing downstream.",
-)
-def quality_rule_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
-    toks = F.split(F.lower(F.trim("text")), r"[ \t\n\x0B\f\r]+")
-    stop = F.array([F.lit(s) for s in
-                    ("the", "and", "of", "to", "a", "in", "is", "it",
-                     "for", "on")])
-    pre = docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("wc"),
-        F.size(F.array_distinct(toks)).cast("long").alias("dc"),
-        F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-        .cast("long")
-        .alias("sw"),
-        F.length(
-            F.regexp_replace(F.trim("text"), r"[ \t\n\x0B\f\r]+", "")
-        ).cast("long").alias("nonsp"),
-        F.length(
-            F.regexp_replace("text", r"[A-Za-z0-9 \t\n\x0B\f\r]", "")
-        ).cast("long").alias("sym"),
-    )
-    r_wc = F.col("wc").between(_WC_MIN, _WC_MAX)
-    r_mwl = (F.col("nonsp") >= _MWL_MIN * F.col("wc")) & (
-        F.col("nonsp") <= _MWL_MAX * F.col("wc")
-    )
-    r_stop = F.col("sw") * 100 >= _STOP_PCT * F.col("wc")
-    r_sym = F.col("sym") * 100 <= _SYM_PCT * F.col("wc")
-    r_dup = (F.col("wc") - F.col("dc")) * 100 <= _DUP_PCT * F.col("wc")
-    return pre.select(
-        "doc_id",
-        "wc",
-        r_wc.alias("r_word_count"),
-        r_mwl.alias("r_mean_word_len"),
-        r_stop.alias("r_stopwords"),
-        r_sym.alias("r_symbols"),
-        r_dup.alias("r_dup_tokens"),
-        (r_wc & r_mwl & r_stop & r_sym & r_dup).alias("keep"),
-    )

@@ -1,18 +1,24 @@
 """Further LLM-training-data operators (SURVEY §7 extension scope):
-PII redaction, duplicate-cluster assignment, benchmark-contamination
-detection, and connected-components grouping of near-duplicate pairs.
+PII redaction, duplicate-cluster assignment and representatives,
+exact-substring duplication, benchmark-contamination detection, and
+connected-components grouping of near-duplicate pairs.
 
-All four are first-class curation steps in a 100 TB text pipeline:
-redact before training, cluster duplicates to pick one representative,
-drop documents that leak evaluation benchmarks, and group transitive
-near-dups so a whole family collapses to one survivor.
+All are first-class curation steps in a 100 TB text pipeline: redact
+before training, cluster duplicates to pick one representative,
+measure repeated substrings, drop documents that leak evaluation
+benchmarks, and group transitive near-dups so a whole family
+collapses to one survivor.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pathlib import Path
+
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_clickhouse_spark import partitioning
+from nyc_taxi_data_clickhouse_spark.scratch import track_persist
 from nyc_taxi_data_clickhouse_spark.suite import load_table, register
 from nyc_taxi_data_clickhouse_spark.operators import dedup
 from nyc_taxi_data_clickhouse_spark.operators.dedup import (
@@ -66,8 +72,6 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_exact",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
     w = W.partitionBy("__norm")
     return (
@@ -78,6 +82,209 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").over(w).alias("cluster_size"),
         )
     )
+
+
+@register(
+    "dedup_cluster_representatives",
+    r"""
+    WITH RECURSIVE toks AS (
+      SELECT doc_id, string_split_regex(lower(trim(text)), '[ \t\n\x0B\f\r]+') AS t
+      FROM documents),
+    sh AS (
+      SELECT doc_id,
+             unnest(list_distinct(list_transform(
+               generate_series(1, greatest(len(t) - 2, 0)),
+               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
+      FROM toks),
+    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+      GROUP BY 1, 2),
+    pairs AS (
+      SELECT id_a, id_b
+      FROM inter
+      JOIN sizes sa ON sa.doc_id = id_a
+      JOIN sizes sb ON sb.doc_id = id_b
+      WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.9),
+    sym AS (
+      SELECT id_a AS a, id_b AS b FROM pairs
+      UNION SELECT id_b, id_a FROM pairs),
+    reach AS (
+      SELECT a, b FROM sym
+      UNION
+      SELECT r.a, s.b FROM reach r JOIN sym s ON s.a = r.b),
+    comp AS (
+      SELECT node, least(node, min(b)) AS component
+      FROM (SELECT DISTINCT a AS node FROM sym) nodes
+      JOIN reach ON reach.a = node
+      GROUP BY node),
+    sized AS (
+      SELECT c.component, c.node, d.n_chars
+      FROM comp c JOIN documents d ON d.doc_id = c.node)
+    SELECT component,
+           node AS rep_doc_id,
+           CAST(cnt AS BIGINT) AS cluster_size
+    FROM (
+      SELECT component, node, n_chars,
+             count(*) OVER (PARTITION BY component) AS cnt,
+             row_number() OVER (PARTITION BY component
+                                ORDER BY n_chars DESC, node) AS rn
+      FROM sized)
+    WHERE rn = 1
+    """,
+    doc="§7 dedup, the step AFTER detection: one canonical document per "
+    "near-dup component (longest n_chars, ties to the lowest doc_id) "
+    "plus the cluster size — what a corpus run keeps, instead of "
+    "dropping every member.  Composes ngram_jaccard_pairs (shared-"
+    "shingle equi-join, dedup.py:182) with the O(log n) large-star/"
+    "small-star components (dedup.py:690) and ONE per-component "
+    "row_number window over the component-sized (not corpus-sized) "
+    "member table.  Oracle: the recursive-CTE transitive closure + the "
+    "same deterministic top-1",
+)
+def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.9)
+    comp = connected_components_star(pairs)
+    sized = comp.join(
+        docs.select(F.col("doc_id").alias("node"), "n_chars"), "node"
+    )
+    w = W.partitionBy("component")
+    wo = w.orderBy(F.desc("n_chars"), F.asc("node"))
+    return (
+        sized.withColumn("cluster_size", F.count("*").over(w))
+        .withColumn("rn", F.row_number().over(wo))
+        .filter(F.col("rn") == 1)
+        .select(
+            "component",
+            F.col("node").alias("rep_doc_id"),
+            F.col("cluster_size").cast("long"),
+        )
+    )
+
+
+# shared by the raw-key and hashed-key registrations: the gram key only
+# decides gram EQUALITY, and xxhash64 equality == string equality up to
+# a ~1e-19·n² collision, so both forms produce identical output and the
+# same DuckDB oracle gates both.
+_SSDF_ORACLE = """
+    WITH pos AS (
+      SELECT doc_id, i, substr(text, CAST(i AS INT), 20) AS g
+      FROM (SELECT doc_id, text,
+                   unnest(generate_series(1, length(text) - 19)) AS i
+            FROM documents WHERE length(text) >= 20)),
+    dup AS (SELECT g FROM pos GROUP BY g HAVING count(*) > 1),
+    dp AS (SELECT p.doc_id, p.i FROM pos p JOIN dup USING (g)),
+    cov AS (
+      SELECT doc_id,
+             least(20, coalesce(lead(i) OVER (PARTITION BY doc_id
+                                              ORDER BY i),
+                                i + 20) - i) AS c
+      FROM dp),
+    agg AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS dup_chars FROM cov GROUP BY doc_id)
+    SELECT d.doc_id, CAST(coalesce(agg.dup_chars, 0) AS BIGINT) AS dup_chars,
+           length(d.text) AS n_chars,
+           round(coalesce(agg.dup_chars, 0) / greatest(length(d.text), 1),
+                 6) AS dup_fraction
+    FROM documents d LEFT JOIN agg USING (doc_id)
+    """
+
+
+@register(
+    "substring_dup_fraction",
+    _SSDF_ORACLE,
+    doc="§7 exact-substring duplication signal (Lee et al. 2022, "
+    "'Deduplicating Training Data Makes Language Models Better'): the "
+    "fraction of each document's characters covered by a 20-char gram "
+    "that occurs more than once in the corpus (including within-doc "
+    "repeats).  Suffix arrays don't distribute; the equivalent "
+    "char-gram formulation does: explode positions, one hash-agg for "
+    "gram frequency, join back the duplicated grams, and merge "
+    "overlapping [i, i+20) intervals per doc with a lead() window "
+    "(coverage = Σ min(20, next_i - i)).  At 100 TB the gram key is "
+    "a 64-bit hash instead of the raw 20-char string (same algebra, "
+    "8× narrower shuffle; raw strings here keep the DuckDB oracle "
+    "hash-function-agnostic), and the frequency table is df-capped "
+    "like the shingle joins.  Every stage is a hash agg / equi-join / "
+    "narrow window — no suffix structure, no all-pairs",
+)
+def substring_dup_fraction(
+    spark: SparkSession, sf_dir: str, key_hash: bool = False
+) -> DataFrame:
+    """``key_hash=True`` is the PRODUCTION form: the gram key becomes
+    ``xxhash64(gram)`` — an 8-byte shuffle key instead of a 20-char
+    string (~8× narrower frequency shuffle and join-back; a 64-bit
+    collision merging two distinct grams is ~1e-19·n² and only ever
+    OVERcounts coverage by one gram).  The oracle-gated entry keeps
+    the raw string so the DuckDB twin needs no matching hash
+    function; the scaling harness measures both forms."""
+    k = 20
+    # the per-char position explode multiplies rows ~1000x BEFORE the
+    # first exchange: from a single-row-group scan that whole expansion
+    # (and the persist populating it) runs on one core — widen when
+    # starved, no-op on naturally partitioned inputs
+    docs = partitioning.widen_for_cpu_map(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    gram = F.expr(f"substr(text, i, {k})")
+    # persist the exploded position table: the gram-frequency agg AND
+    # the join-back both consume it (VERDICT r3 #4 recompute rule).
+    # track_persist bounds the cache to one live copy across repeated
+    # calls (the lazily-consumed result forbids in-body unpersist).
+    pos = track_persist(
+        f"ssdf_pos_{key_hash}_{Path(sf_dir).name}",
+        docs.filter(F.length("text") >= k).select(
+            "doc_id",
+            F.explode(
+                F.sequence(F.lit(1), F.length("text") - (k - 1))
+            ).alias("i"),
+            (F.xxhash64(gram) if key_hash else gram).alias("g"),
+        ),
+    )
+    dup = pos.groupBy("g").agg(F.count("*").alias("__n")).filter(
+        F.col("__n") > 1
+    )
+    dp = pos.join(dup.select("g"), "g").select("doc_id", "i")
+    w = W.partitionBy("doc_id").orderBy("i")
+    cov = dp.select(
+        "doc_id",
+        F.least(
+            F.lit(k),
+            F.coalesce(F.lead("i").over(w), F.col("i") + k) - F.col("i"),
+        ).alias("c"),
+    )
+    agg = cov.groupBy("doc_id").agg(F.sum("c").alias("dup_chars"))
+    return (
+        docs.join(agg, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("dup_chars", F.lit(0)).alias("dup_chars"),
+            F.length("text").alias("n_chars"),
+            F.round(
+                F.coalesce("dup_chars", F.lit(0))
+                / F.greatest(F.length("text"), F.lit(1)),
+                6,
+            ).alias("dup_fraction"),
+        )
+    )
+
+
+@register(
+    "substring_dup_fraction_hashed",
+    _SSDF_ORACLE,
+    doc="PRODUCTION form of substring_dup_fraction (VERDICT r6 item 6): "
+    "gram key = xxhash64(gram), an 8-byte shuffle key instead of a "
+    "20-char string — ~8× narrower frequency shuffle and join-back, "
+    "0.66 marginal scaling slope vs 1.15 for the raw form "
+    "(SCALING_r05.json).  Output is identical to the raw form (the key "
+    "only decides gram equality; a 64-bit collision is ~1e-19·n² and "
+    "only ever overcounts one gram), so the SAME DuckDB oracle gates "
+    "it.  This is the form the headline bench times; the raw entry "
+    "stays as the hash-agnostic twin",
+)
+def substring_dup_fraction_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return substring_dup_fraction(spark, sf_dir, key_hash=True)
 
 
 @register(
@@ -161,13 +368,11 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "transitive closure)",
 )
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nyc_taxi_data_clickhouse_spark.partitioning import widen_for_cpu_map
-
     # shingle explode + self-join stage-1 is CPU-bound; a single-row-
     # group scan serializes it (measured 3.6 -> 1.7 s at sf0.1).  The
     # capped (max_df) jaccard entry is deliberately NOT widened — its
     # hot-set broadcast path measured unstable under widening.
-    docs = widen_for_cpu_map(load_table(spark, sf_dir, "documents"))
+    docs = partitioning.widen_for_cpu_map(load_table(spark, sf_dir, "documents"))
     pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.9)
     return connected_components(pairs).select("node", "component")
 
@@ -214,9 +419,7 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DuckDB recursive-CTE oracle",
 )
 def near_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nyc_taxi_data_clickhouse_spark.partitioning import widen_for_cpu_map
-
-    docs = widen_for_cpu_map(load_table(spark, sf_dir, "documents"))
+    docs = partitioning.widen_for_cpu_map(load_table(spark, sf_dir, "documents"))
     pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.9)
     return connected_components_star(pairs).select("node", "component")
 
@@ -258,8 +461,6 @@ from nyc_taxi_data_clickhouse_spark.operators import text as text_ops  # noqa: E
     "composed",
 )
 def documents_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     docs = load_table(spark, sf_dir, "documents")
     pre = docs.select(
         "doc_id", "text", text_ops.tokens("text").alias("__toks")
@@ -370,7 +571,7 @@ def regex_extract_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.trim("text") != "")
-    d = F.array_distinct(F.split(F.lower(F.trim("text")), r"[ \t\n\x0B\f\r]+"))
+    d = F.array_distinct(text_ops.tokens("text"))
     stop = F.array([F.lit(w) for w in ["the", "a", "of", "and", "to"]])
     return docs.select(
         "doc_id",
@@ -404,12 +605,10 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the assignment for the gate",
 )
 def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nyc_taxi_data_clickhouse_spark.operators.selection import doc_bucket
+
     docs = load_table(spark, sf_dir, "documents")
-    # mod-reduce before the Knuth multiply so the product stays within
-    # int64 for any doc_id: Spark wraps on overflow while DuckDB
-    # (HUGEINT) and other engines don't, which would silently diverge
-    # split assignment above doc_id ~3.5e9
-    bucket = ((F.col("doc_id") % 1000003) * F.lit(2654435761)) % 100
+    bucket = doc_bucket("doc_id")
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -455,11 +654,6 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "whitespace token proxy keeps the oracle engine-portable",
 )
 def token_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    from nyc_taxi_data_clickhouse_spark import partitioning
-    from nyc_taxi_data_clickhouse_spark.scratch import track_persist
-
     docs = load_table(spark, sf_dir, "documents")
     toks = (
         F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "))) + 1

@@ -26,11 +26,24 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 ENGLISH_STOPWORDS = LANG_MARKERS["en"]
 
+#: the whitespace characters, spelled out: Java's and RE2's shorthand
+#: classes disagree on \x0B, so every engine-side regex builds on this
+#: set and every oracle restates it literally (ADVICE r10 contract)
+WHITESPACE = r" \t\n\x0B\f\r"
+#: one whitespace run — the tokenizer's split pattern
+WS_RUN = f"[{WHITESPACE}]+"
+
 
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization of lowercased, trimmed text."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.lower(F.trim(c)), r"[ \t\n\x0B\f\r]+")
+    return F.split(F.lower(F.trim(c)), WS_RUN)
+
+
+def nonspace_length(col: Column | str) -> Column:
+    """Character count of the trimmed text with all whitespace removed."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.length(F.regexp_replace(F.trim(c), WS_RUN, ""))
 
 
 def token_count(col: Column | str, toks: Column | None = None) -> Column:
@@ -63,9 +76,7 @@ def quality_features(col: Column | str, toks: Column | None = None) -> list[Colu
     punct = F.regexp_count(c, F.lit(r"[.!?,;:]"))
     stop_hits = _marker_hits(toks, ENGLISH_STOPWORDS)
     stop_ratio = F.when(wc > 0, stop_hits / wc).otherwise(F.lit(0.0))
-    mean_word_len = F.when(
-        wc > 0, F.length(F.regexp_replace(F.trim(c), r"[ \t\n\x0B\f\r]+", "")) / wc
-    ).otherwise(F.lit(0.0))
+    mean_word_len = F.when(wc > 0, nonspace_length(c) / wc).otherwise(F.lit(0.0))
     # integer-valued composite in [0, 1000]: length term (<=500) +
     # stopword term (<=300) + word-shape term (200).  Integer arithmetic
     # end-to-end so the score can never land on a float rounding
@@ -103,7 +114,7 @@ def lang_id(col: Column | str, toks: Column | None = None) -> Column:
 #: non-space-non-word symbols — the GPT-2-style split shape, minus
 #: lookaheads so the same pattern runs in Spark (Java regex) and
 #: DuckDB (RE2) identically.
-SUBWORD_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0B\f\r]"
+SUBWORD_PATTERN = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WHITESPACE}]"
 
 
 def subword_token_count(col: Column | str) -> Column:

@@ -10,7 +10,8 @@ No gate engages at sf0.01/sf0.1 or sits on the taxi ingest/query path.
 - side-table broadcast or shuffle join (``BROADCAST_GROUP_BOUND``):
   :func:`group_table_hint`, :func:`side_table_join_hint`;
 - star-CC round joins (``STAR_SHJ_EDGE_BOUND``):
-  :func:`star_round_join_hint`.
+  :func:`star_round_join_hint`, and the star rounds' single-task
+  finish (``STAR_LOCAL_FINISH_EDGES``).
 
 Why data-sized widths (VERDICT r8 item 1): Spark's
 ``spark.sql.shuffle.partitions`` is a SESSION constant, sized to the
@@ -120,6 +121,12 @@ BROADCAST_GROUP_BOUND = 500_000
 #: tables are bounded by the edge count — hint at half that for
 #: headroom.
 STAR_SHJ_EDGE_BOUND = 2_000_000
+
+#: Edge count at or below which ``dedup.connected_components_star``
+#: stops running star rounds and labels the remnant with one
+#: single-task union-find (same labels, one job instead of O(log n)
+#: rounds).  0 disables the local finish (pure star rounds).
+STAR_LOCAL_FINISH_EDGES = 200_000
 
 _CPU_MAP_TARGET_KEY = "spark.graft.cpuMapTargetPartitions"
 

@@ -1,6 +1,7 @@
 """Second extension-surface batch: value-based RANGE window frames,
 rank statistics, schema-evolution union, and an ORC source/sink
-roundtrip.
+roundtrip, plus permissive JSONL ingestion with corrupt-record
+quarantine.
 
 Fills the remaining gaps a reference user would hit moving real
 workloads onto the engine: time-valued window frames (RANGE BETWEEN
@@ -21,11 +22,12 @@ Scale notes:
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_clickhouse_spark.scratch import scratch_dir
 from nyc_taxi_data_clickhouse_spark.suite import load_table, register
 
 
@@ -137,8 +139,6 @@ def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def orc_roundtrip_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    from nyc_taxi_data_clickhouse_spark.scratch import scratch_dir
-
     out = scratch_dir("orc_roundtrip_")
     o.write.mode("overwrite").orc(out)
     return spark.read.orc(out).select(
@@ -148,6 +148,50 @@ def orc_roundtrip_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "o_orderdate",
         "o_orderpriority",
+    )
+
+
+@register(
+    "jsonl_ingest",
+    """
+    SELECT lang, count(*) AS cnt, CAST(sum(n_chars) AS BIGINT) AS total_chars
+    FROM documents GROUP BY lang
+    """,
+    doc="§2.1 extension source: permissive JSONL ingestion — the "
+    "format real LLM corpora arrive in (the reference ingests only "
+    "gzipped CSV).  The entry stages the documents table as JSON "
+    "lines, appends a malformed line, and reads it back with an "
+    "explicit schema in PERMISSIVE mode: bad records land in "
+    "_corrupt_record instead of failing the job or silently skewing "
+    "aggregates, and are quarantined by one filter.  Oracle: the "
+    "same per-lang rollup over the clean table — a surviving corrupt "
+    "row or a dropped good row breaks count and sum.  At 100 TB the "
+    "stage-out disappears (data already lands as JSONL); schema-on-"
+    "read with explicit types avoids the double-pass inference scan",
+)
+def jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    # atexit-reaped scratch dir — repeated suite/bench runs leave /tmp
+    # flat (VERDICT r6 item 4)
+    stage = scratch_dir("jsonl_")
+    docs.write.mode("overwrite").json(stage)
+    with open(os.path.join(stage, "zz_corrupt.json"), "w") as f:
+        f.write('{"doc_id": 999999999, "text": "unclosed\n')
+        f.write("not json at all\n")
+    schema = (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, "
+        "n_chars BIGINT, _corrupt_record STRING"
+    )
+    raw = (
+        spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(stage)
+    )
+    clean = raw.filter(F.col("_corrupt_record").isNull())
+    return clean.groupBy("lang").agg(
+        F.count("*").alias("cnt"),
+        F.sum("n_chars").alias("total_chars"),
     )
 
 

@@ -180,7 +180,7 @@ def _pii_scrub_shape(docs: DataFrame) -> DataFrame:
     redaction chain) over a replicated documents table — the map-only
     shape a 100 TB curation pipeline runs before anything else touches
     the text (VERDICT r9 item 6)."""
-    from nyc_taxi_data_clickhouse_spark.operators.round9_ops import (
+    from nyc_taxi_data_clickhouse_spark.operators.curation import (
         _inject_pii,
         _scrub_report,
     )

@@ -4,7 +4,9 @@
 Each entry drains a bounded Structured Streaming pipeline with
 availableNow and is oracle-gated against the equivalent batch SQL —
 the stream==batch convergence contract that defines correctness for a
-streaming operator.
+streaming operator.  The two ``session_window`` entries are the
+declarative sessionization pair: complete mode for bounded drains,
+watermark + append mode for unbounded streams.
 """
 
 from __future__ import annotations
@@ -355,3 +357,132 @@ def streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFram
                 spark.conf.unset(conf_key)
             else:
                 spark.conf.set(conf_key, saved)
+
+
+def _session_rollup(events: DataFrame) -> DataFrame:
+    """Per-user sessions (built-in ``session_window``, 30-min gap) with
+    event count and rounded value total."""
+    return (
+        events.groupBy(
+            F.session_window("ts", "30 minutes").alias("sw"), "user_id"
+        )
+        .agg(
+            F.count("*").alias("cnt"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+        .select(
+            "user_id",
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "cnt",
+            "total_value",
+        )
+    )
+
+
+@register(
+    "streaming_session_window",
+    """
+    WITH ordered AS (
+      SELECT user_id, ts, value,
+             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+      FROM events),
+    flagged AS (
+      SELECT user_id, ts, value,
+             CASE WHEN prev IS NULL
+                       OR epoch_us(ts) - epoch_us(prev) > 1800000000
+                  THEN 1 ELSE 0 END AS new_s
+      FROM ordered),
+    sess AS (
+      SELECT user_id, ts, value,
+             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, new_s DESC
+                              ROWS UNBOUNDED PRECEDING) AS sid
+      FROM flagged)
+    SELECT user_id,
+           min(ts) AS session_start,
+           max(ts) + INTERVAL 30 MINUTE AS session_end,
+           count(*) AS cnt,
+           round(sum(value), 2) AS total_value
+    FROM sess GROUP BY user_id, sid
+    """,
+    doc="§2.9: DECLARATIVE streaming sessionization via the built-in "
+    "session_window (30-min gap), drained with availableNow in "
+    "complete mode — the Catalyst-native twin of events.py's "
+    "applyInPandasWithState sessionize (which keeps custom per-key "
+    "state).  Oracle is the gaps-and-islands batch SQL; Spark's "
+    "session end = last event + gap, mirrored by max(ts)+30min.  "
+    "NOTE: complete mode retains ALL session state and the full "
+    "memory-sink result, so this exact shape is for bounded "
+    "(availableNow / test) drains only — an unbounded production "
+    "stream must instead use withWatermark + append output so closed "
+    "sessions are emitted once and state is evicted (that shape is "
+    "exercised by streaming_late_data_drop).  State shards by "
+    "user_id; no driver-side work",
+)
+def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nyc_taxi_data_clickhouse_spark.streaming.events import (
+        read_events_stream,
+        run_to_completion,
+    )
+
+    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    agg = _session_rollup(stream)
+    name = f"sesswin_{uuid.uuid4().hex[:8]}"
+    return run_to_completion(agg, name, output_mode="complete")
+
+
+@register(
+    "streaming_session_window_append",
+    """
+    WITH ordered AS (
+      SELECT user_id, ts, value,
+             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+      FROM events),
+    flagged AS (
+      SELECT user_id, ts, value,
+             CASE WHEN prev IS NULL
+                       OR epoch_us(ts) - epoch_us(prev) > 1800000000
+                  THEN 1 ELSE 0 END AS new_s
+      FROM ordered),
+    sess AS (
+      SELECT user_id, ts, value,
+             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, new_s DESC
+                              ROWS UNBOUNDED PRECEDING) AS sid
+      FROM flagged),
+    agg AS (
+      SELECT user_id,
+             min(ts) AS session_start,
+             max(ts) + INTERVAL 30 MINUTE AS session_end,
+             count(*) AS cnt,
+             round(sum(value), 2) AS total_value
+      FROM sess GROUP BY user_id, sid),
+    wm AS (SELECT max(ts) - INTERVAL 1 HOUR AS wm FROM events)
+    SELECT agg.user_id, agg.session_start, agg.session_end,
+           agg.cnt, agg.total_value
+    FROM agg, wm WHERE agg.session_end < wm.wm
+    """,
+    doc="§2.9: PRODUCTION sessionization — session_window (30-min gap) "
+    "with withWatermark(ts, 1h) in APPEND mode: a session is emitted "
+    "exactly once, when the watermark passes its end, and its state is "
+    "then evicted — the shape that runs unbounded at 100 TB, unlike "
+    "the complete-mode twin (streaming_session_window) whose state and "
+    "sink grow forever.  availableNow's final no-data batch advances "
+    "the watermark to max(ts) - 1h, so the emitted set is exactly the "
+    "sessions with end < max(ts) - 1h; trailing sessions stay in state "
+    "(on a real stream they emit as the watermark advances).  Oracle: "
+    "batch gaps-and-islands sessions filtered by that emission rule.  "
+    "Scale: state shards by (user_id, session), eviction is "
+    "watermark-bounded, checkpointable across restarts",
+)
+def streaming_session_window_append(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from nyc_taxi_data_clickhouse_spark.streaming.events import (
+        read_events_stream,
+        run_to_completion,
+    )
+
+    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    agg = _session_rollup(stream.withWatermark("ts", "1 hour"))
+    name = f"sessapp_{uuid.uuid4().hex[:8]}"
+    return run_to_completion(agg, name, output_mode="append")

@@ -163,13 +163,11 @@ def registry() -> dict[str, QuerySpec]:
     from nyc_taxi_data_clickhouse_spark.functions import vectorized  # noqa: F401
     from nyc_taxi_data_clickhouse_spark.plans import pipeline_e2e  # noqa: F401
     from nyc_taxi_data_clickhouse_spark.operators import corpus_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import round4_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import round5_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import round8_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import round9_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import round10_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import round12_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import round13_ops  # noqa: F401
+    from nyc_taxi_data_clickhouse_spark.operators import stats  # noqa: F401
+    from nyc_taxi_data_clickhouse_spark.operators import curation  # noqa: F401
+    from nyc_taxi_data_clickhouse_spark.operators import selection  # noqa: F401
+    from nyc_taxi_data_clickhouse_spark.operators import graph  # noqa: F401
+    from nyc_taxi_data_clickhouse_spark.operators import vocab  # noqa: F401
 
     ordered = _ordered_names(list(_REGISTRY), _driver_verified_rounds())
     return {name: _REGISTRY[name] for name in ordered}

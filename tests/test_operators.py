@@ -976,7 +976,7 @@ def test_star_matches_propagation_on_random_graph(spark):
     assert star == prop
 
 
-def test_star_chain_converges_in_log_rounds(spark):
+def test_star_chain_converges_in_log_rounds(spark, monkeypatch):
     """A 256-node chain (diameter 255) must finish within ~2·log2(256)
     alternating rounds — the O(log n) contract propagation can't meet
     (it would need 255 iterations)."""
@@ -984,14 +984,13 @@ def test_star_chain_converges_in_log_rounds(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    rows = dedup.connected_components_star(
-        pairs, max_rounds=20, local_finish_edges=0
-    ).collect()
+    monkeypatch.setattr(partitioning, "STAR_LOCAL_FINISH_EDGES", 0)
+    rows = dedup.connected_components_star(pairs, max_rounds=20).collect()
     assert {r["component"] for r in rows} == {0}
     assert len(rows) == n
 
 
-def test_star_hybrid_finish_matches_pure_star(spark):
+def test_star_hybrid_finish_matches_pure_star(spark, monkeypatch):
     """The union-find finish — immediate (edge list under threshold)
     and mid-loop (threshold crossed after contraction rounds) — must
     label identically to pure star rounds."""
@@ -999,22 +998,19 @@ def test_star_hybrid_finish_matches_pure_star(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    pure = {
-        (r["node"], r["component"])
-        for r in dedup.connected_components_star(
-            pairs, local_finish_edges=0
-        ).collect()
-    }
-    immediate = {
-        (r["node"], r["component"])
-        for r in dedup.connected_components_star(pairs).collect()
-    }
-    midloop = {
-        (r["node"], r["component"])
-        for r in dedup.connected_components_star(
-            pairs, local_finish_edges=100
-        ).collect()
-    }
+
+    def labels(finish_edges):
+        monkeypatch.setattr(
+            partitioning, "STAR_LOCAL_FINISH_EDGES", finish_edges
+        )
+        return {
+            (r["node"], r["component"])
+            for r in dedup.connected_components_star(pairs).collect()
+        }
+
+    immediate = labels(partitioning.STAR_LOCAL_FINISH_EDGES)  # the default
+    pure = labels(0)
+    midloop = labels(100)
     assert immediate == pure
     assert midloop == pure
 
@@ -1031,6 +1027,12 @@ def test_star_shuffle_hash_gate_labels_identically(spark, monkeypatch):
     returned DataFrame)."""
     bound = partitioning.STAR_SHJ_EDGE_BOUND
     monkeypatch.setattr(partitioning, "STAR_SHJ_EDGE_BOUND", 0)  # always hint
+    # no local finish on either side (ADVICE r8): without it these
+    # <=150-edge graphs short-circuit to the union-find local finish
+    # and never execute the UN-hinted star rounds — the comparison
+    # would be hinted-rounds vs union-find, not hinted vs un-hinted
+    # rounds as this test claims.
+    monkeypatch.setattr(partitioning, "STAR_LOCAL_FINISH_EDGES", 0)
     rng = random.Random(11)
     for pairs in (
         spark.createDataFrame(
@@ -1043,21 +1045,12 @@ def test_star_shuffle_hash_gate_labels_identically(spark, monkeypatch):
     ):
         hinted = {
             (r["node"], r["component"])
-            for r in dedup.connected_components_star(
-                pairs, local_finish_edges=0
-            ).collect()
+            for r in dedup.connected_components_star(pairs).collect()
         }
         monkeypatch.setattr(partitioning, "STAR_SHJ_EDGE_BOUND", bound)
-        # local_finish_edges=0 on the baseline too (ADVICE r8): without
-        # it these <=150-edge graphs short-circuit to the union-find
-        # local finish and never execute the UN-hinted star rounds —
-        # the comparison would be hinted-rounds vs union-find, not
-        # hinted vs un-hinted rounds as this test claims.
         plain = {
             (r["node"], r["component"])
-            for r in dedup.connected_components_star(
-                pairs, local_finish_edges=0
-            ).collect()
+            for r in dedup.connected_components_star(pairs).collect()
         }
         monkeypatch.setattr(partitioning, "STAR_SHJ_EDGE_BOUND", 0)
         assert hinted == plain
@@ -1075,14 +1068,13 @@ def test_star_shuffle_hash_gate_labels_identically(spark, monkeypatch):
     assert "ShuffledHashJoin" in plan, plan[:800]
 
 
-def test_star_raises_on_round_exhaustion(spark):
+def test_star_raises_on_round_exhaustion(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "id_a long, id_b long"
     )
+    monkeypatch.setattr(partitioning, "STAR_LOCAL_FINISH_EDGES", 0)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        dedup.connected_components_star(
-            pairs, max_rounds=1, local_finish_edges=0
-        )
+        dedup.connected_components_star(pairs, max_rounds=1)
 
 
 def test_resize_images_geometry_and_determinism(spark):

@@ -103,20 +103,17 @@ def test_star_cc_labels_invariant_under_forced_round_sizing(spark, monkeypatch):
         [(rng.randrange(100), rng.randrange(100)) for _ in range(160)],
         "id_a long, id_b long",
     ).filter("id_a <> id_b")
+    monkeypatch.setattr(partitioning, "STAR_LOCAL_FINISH_EDGES", 0)
     plain = {
         (r["node"], r["component"])
-        for r in dedup.connected_components_star(
-            pairs, local_finish_edges=0
-        ).collect()
+        for r in dedup.connected_components_star(pairs).collect()
     }
     monkeypatch.setattr(
         partitioning, "sized_partitions_for_rows", lambda *a, **k: 5
     )
     forced = {
         (r["node"], r["component"])
-        for r in dedup.connected_components_star(
-            pairs, local_finish_edges=0
-        ).collect()
+        for r in dedup.connected_components_star(pairs).collect()
     }
     assert plain == forced and plain
 

@@ -145,7 +145,7 @@ def test_plan_invariants(spark, name, spec):
 # BROADCAST_GROUP_BOUND so a refactor can't silently regress either the
 # small-group broadcast fast path or the high-cardinality shuffle
 # fallback.  `default` exercises the guard job; `asserted` the caller's
-# explicit broadcast_stats contract (round4_ops.py mad_outliers path).
+# explicit broadcast_stats contract (stats.py mad_outliers path).
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("op_kind", ["median", "quantiles"])
@@ -224,7 +224,7 @@ def test_selection_broadcast_gate_plan_shape(spark, monkeypatch, op_name):
     from nyc_taxi_data_clickhouse_spark.operators.corpus_ops import (
         domain_mix_temperature,
     )
-    from nyc_taxi_data_clickhouse_spark.operators.round10_ops import (
+    from nyc_taxi_data_clickhouse_spark.operators.selection import (
         quality_percentile_by_domain,
     )
 

@@ -1,4 +1,4 @@
-"""Round-10 selection primitives: token-budget cutoff and per-domain
+"""Selection primitives: token-budget cutoff and per-domain
 percentile normalization — edge semantics the suite oracles don't pin."""
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_clickhouse_spark.operators.round10_ops import (
+from nyc_taxi_data_clickhouse_spark.operators.selection import (
     quality_bucket,
     quality_percentile_by_domain,
     token_budget_selection,

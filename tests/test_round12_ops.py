@@ -1,4 +1,4 @@
-"""Round-12 operators: PageRank, triangle counting, A-ES weighted
+"""PageRank, triangle counting, label propagation, A-ES weighted
 sampling, the Gopher-style rule filter, and the G.711 mu-law codec —
 edge semantics the suite oracles don't pin (hand graphs, per-rule
 boundary docs, the full 256-codeword expand table)."""
@@ -11,12 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_clickhouse_spark import partitioning
-from nyc_taxi_data_clickhouse_spark.operators.round12_ops import (
-    _KNUTH,
-    aes_key,
-    pagerank,
-    triangle_count,
-)
+from nyc_taxi_data_clickhouse_spark.operators.graph import pagerank, triangle_count
+from nyc_taxi_data_clickhouse_spark.operators.selection import KNUTH, aes_key
 
 
 def _edges(spark, pairs, cols=("src", "dst")):
@@ -82,10 +78,7 @@ def test_pagerank_join_gate_plan_shape(spark, monkeypatch):
     Both paths must also produce identical rank values."""
     from pyspark.sql import functions as F
 
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import (
-        _pagerank_step,
-        pagerank,
-    )
+    from nyc_taxi_data_clickhouse_spark.operators.graph import _pagerank_step
 
     edges = _edges(spark, [(i, 100 + i % 5) for i in range(50)])
     nodes = (
@@ -228,9 +221,7 @@ def test_triangles_two_sharing_edge(spark):
 
 
 def test_lpa_disjoint_triangles_converge_to_min_label(spark):
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import (
-        label_propagation,
-    )
+    from nyc_taxi_data_clickhouse_spark.operators.graph import label_propagation
 
     tris = [(0, 1), (0, 2), (1, 2), (10, 11), (10, 12), (11, 12)]
     got = {
@@ -247,9 +238,7 @@ def test_lpa_path_sync_update_semantics(spark):
     middle node ties {0,2} and takes the min — iter2 gives (0, 1, 0).
     Pins that updates read the PREVIOUS iteration's labels, not a
     mid-iteration mix."""
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import (
-        label_propagation,
-    )
+    from nyc_taxi_data_clickhouse_spark.operators.graph import label_propagation
 
     path = [(0, 1), (1, 2)]
     it1 = {
@@ -283,21 +272,21 @@ def test_aes_key_matches_python(spark):
         ).collect()
     }
     for i, w in rows:
-        u = ((i * _KNUTH) % 2**32 + 1.0) / 2**32
+        u = ((i * KNUTH) % 2**32 + 1.0) / 2**32
         assert got[i] == pytest.approx(u ** (1.0 / w), rel=1e-15)
 
 
 _HUGE_IDS = [
     1,
     2**31,
-    3_470_000_000,        # just past 2^63 // _KNUTH — naive product overflows
+    3_470_000_000,        # just past 2^63 // KNUTH — naive product overflows
     2**32 - 1,
     2**32,
     2**40 + 12345,
     2**62 + 999,
     2**63 - 1,
     # negative ids: Spark pmod vs DuckDB's sign-preserving % — the
-    # oracle restates pmod explicitly (round12_ops._AES_X_SQL), and
+    # oracle restates pmod explicitly (selection._AES_X_SQL), and
     # Python's floored % is the shared reference
     -1,
     -(2**31),
@@ -310,7 +299,7 @@ def test_aes_hash_overflow_safe_full_int64_range(spark):
     (silently wrapping into negative remainders -> NaN keys).  The
     split-halves hash must equal Python bigint arithmetic and stay in
     [0, 2^32) for the FULL int64 id range."""
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import aes_hash
+    from nyc_taxi_data_clickhouse_spark.operators.selection import aes_hash
 
     df = spark.createDataFrame([(i,) for i in _HUGE_IDS], "doc_id long")
     got = {
@@ -320,7 +309,7 @@ def test_aes_hash_overflow_safe_full_int64_range(spark):
         ).collect()
     }
     for i in _HUGE_IDS:
-        assert got[i] == (i * _KNUTH) % 2**32, i
+        assert got[i] == (i * KNUTH) % 2**32, i
         assert 0 <= got[i] < 2**32
 
 
@@ -330,20 +319,19 @@ def test_aes_hash_oracle_sql_matches_on_huge_ids():
     the split-halves form stays below 2^48)."""
     import duckdb
 
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import _AES_H_SQL
+    from nyc_taxi_data_clickhouse_spark.operators.selection import _AES_H_SQL
 
     con = duckdb.connect()
     for i in _HUGE_IDS:
         (h,) = con.execute(
             f"SELECT {_AES_H_SQL} AS h FROM (SELECT CAST({i} AS BIGINT) AS doc_id)"
         ).fetchone()
-        assert h == (i * _KNUTH) % 2**32, i
+        assert h == (i * KNUTH) % 2**32, i
 
 
 def test_aes_key_positive_for_huge_ids(spark):
     """The end-to-end key u^(1/w) must be a real number in (0, 1] —
     never NaN — even where the naive hash would have gone negative."""
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import aes_key
 
     df = spark.createDataFrame(
         [(i, 100) for i in _HUGE_IDS], "doc_id long, n_chars long"
@@ -357,7 +345,7 @@ def test_aes_heavier_weights_win_in_expectation():
     # near 1 for almost any u; over many id pairs the heavy item's
     # key beats the light item's almost always
     def u(i):
-        return ((i * _KNUTH) % 2**32 + 1.0) / 2**32
+        return ((i * KNUTH) % 2**32 + 1.0) / 2**32
 
     wins = sum(
         1 for i in range(100) if u(i) ** (1 / 1000) > u(i + 100) ** (1 / 1)
@@ -366,7 +354,7 @@ def test_aes_heavier_weights_win_in_expectation():
 
 
 def test_weighted_sample_per_domain_caps_and_ranks(spark, tmp_path):
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import (
+    from nyc_taxi_data_clickhouse_spark.operators.selection import (
         _PER_DOMAIN_K,
         weighted_sample_per_domain,
     )
@@ -391,7 +379,7 @@ def test_weighted_sample_per_domain_caps_and_ranks(spark, tmp_path):
         )
         # ranks follow the A-ES key order within the domain
         def key(r):
-            u = ((r["doc_id"] * _KNUTH) % 2**32 + 1.0) / 2**32
+            u = ((r["doc_id"] * KNUTH) % 2**32 + 1.0) / 2**32
             return u ** (1.0 / r["n_chars"])
 
         ordered = sorted(group, key=lambda r: (-key(r), r["doc_id"]))
@@ -407,9 +395,7 @@ def test_weighted_sample_per_domain_caps_and_ranks(spark, tmp_path):
 
 
 def test_quality_rules_attribute_each_failure(spark, tmp_path):
-    from nyc_taxi_data_clickhouse_spark.operators.round12_ops import (
-        quality_rule_filter,
-    )
+    from nyc_taxi_data_clickhouse_spark.operators.curation import quality_rule_filter
 
     good = "the quick brown fox jumps over a lazy dog and then it " \
            "runs on far to the hills for a while in clear air " + \

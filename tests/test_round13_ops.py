@@ -1,4 +1,4 @@
-"""Round-13 operators: Count-Min heavy hitters and BPE pair-merge
+"""Vocabulary sketches: Count-Min heavy hitters and BPE pair-merge
 counting — hand fixtures pinning the sketch arithmetic, the
 over-estimate invariant, and the vocabulary-scale counting shape."""
 
@@ -7,9 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_clickhouse_spark.operators.round13_ops import (
+from nyc_taxi_data_clickhouse_spark.operators.vocab import (
     _FP_MOD,
-    _KNUTH,
     CMS_DEPTH,
     CMS_SEED_STRIDE,
     CMS_WIDTH,
@@ -20,6 +19,7 @@ from nyc_taxi_data_clickhouse_spark.operators.round13_ops import (
     term_counts,
     term_fingerprint,
 )
+from nyc_taxi_data_clickhouse_spark.operators.selection import KNUTH
 
 
 def _docs(spark, texts):
@@ -37,7 +37,7 @@ def _py_fp(term: str) -> int:
 
 
 def _py_bucket(fp: int, j: int) -> int:
-    return ((fp + j * CMS_SEED_STRIDE) * _KNUTH) % 2**32 % CMS_WIDTH
+    return ((fp + j * CMS_SEED_STRIDE) * KNUTH) % 2**32 % CMS_WIDTH
 
 
 # ---------------------------------------------------------------------------
@@ -64,7 +64,7 @@ def test_term_fingerprint_unicode_parity_spark_duckdb_python(spark):
     corpus cannot silently break the oracle's byte-exactness."""
     import duckdb
 
-    from nyc_taxi_data_clickhouse_spark.operators.round13_ops import _FP_SQL
+    from nyc_taxi_data_clickhouse_spark.operators.vocab import _FP_SQL
 
     terms = ["naïve", "东京", "🚀x", "café"]
     df = spark.createDataFrame([(t,) for t in terms], "term string")
@@ -175,7 +175,7 @@ def test_bpe_tie_break_is_total(spark, tmp_path):
     assert [(r["rank"], r["pair"]) for r in out] == [(1, "ab"), (2, "ba")]
 
 
-def test_round13_plans_are_vocab_scale(spark):
+def test_sketch_plans_are_vocab_scale(spark):
     """Plan hygiene: no cartesian, no Python eval, no sort-merge join,
     and the CMS sketch join is broadcast — the corpus-scale work is
     hash aggregation only."""

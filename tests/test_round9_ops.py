@@ -1,11 +1,11 @@
-"""Round-9 curation primitives: PII scrub and URL canonicalization
+"""Curation primitives: PII scrub and URL canonicalization
 edge cases the closed-form suite oracles don't reach."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_clickhouse_spark.operators.round9_ops import (
+from nyc_taxi_data_clickhouse_spark.operators.curation import (
     scrub_pii,
     url_canonicalize,
 )
@@ -33,7 +33,7 @@ def test_scrub_pii_all_kinds(spark):
     }
 
 
-def test_scrub_pii_round10_kinds(spark):
+def test_scrub_pii_ipv6_card_iban_kinds(spark):
     s, n = _scrub_one(
         spark,
         "v6 2001:0db8:85a3:0000:0000:8a2e:0370:7334 "
@@ -52,7 +52,7 @@ def test_scrub_pii_round10_kinds(spark):
 
 
 def test_luhn_valid_builtin_arithmetic(spark):
-    from nyc_taxi_data_clickhouse_spark.operators.round9_ops import (
+    from nyc_taxi_data_clickhouse_spark.operators.curation import (
         luhn_valid,
     )
 
