@@ -210,12 +210,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never materializes separately and the only full-data pass is the "
     "summarizing agg.",
 )
-def domain_mix_temperature(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    broadcast_side: bool | None = None,
-) -> DataFrame:
+def domain_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_taxi_data_clickhouse_spark.operators.selection import doc_bucket
     from nyc_taxi_data_clickhouse_spark.partitioning import group_table_hint
 
@@ -235,7 +230,7 @@ def domain_mix_temperature(
     bucket = doc_bucket("doc_id")
     # per-domain side table: unbounded cardinality on a real crawl, so
     # the broadcast is count-gated with a shuffle-join fallback
-    hint = group_table_hint(rates, broadcast_side, label="domain_mix_rates")
+    hint = group_table_hint(rates, None, label="domain_mix_rates")
     kept = docs.select("lang", bucket.alias("__b")).join(hint(rates), "lang")
     return kept.groupBy("lang", "n_total", "rate").agg(
         F.sum((F.col("__b") < F.col("rate")).cast("long")).alias("n_kept")

@@ -173,12 +173,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "small-integer ratio (below/n) so the IEEE division is identical "
     "cross-engine.",
 )
-def quality_percentile_by_domain(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    broadcast_side: bool | None = None,
-) -> DataFrame:
+def quality_percentile_by_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_taxi_data_clickhouse_spark.partitioning import group_table_hint
 
     docs = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
@@ -198,7 +193,7 @@ def quality_percentile_by_domain(
     # (domain, bucket) cardinality is unbounded on a real crawl, so the
     # broadcast must be guarded exactly like the per-group stats tables
     # in exact order statistics: count-gated, shuffle-join fallback.
-    hint = group_table_hint(cdf, broadcast_side, label="domain_quality_cdf")
+    hint = group_table_hint(cdf, None, label="domain_quality_cdf")
     return scored.join(hint(cdf), ["lang", "bucket"]).select(
         "doc_id",
         "lang",

@@ -10,7 +10,7 @@ this entry chains ALL of them in one driver-checkable run:
       -> write_csv_shards (gzipped, \\N nulls)       [S3]
       -> read_trips_csv   (schema'd, ''/\\N -> NULL) [S1/S2]
       -> curate_trips     (45-expression cleanup)    [P2/E3]
-      -> write_gold       (month-partitioned, sort-clustered) [S5]
+      -> write_gold       (year-partitioned, sort-clustered) [S5]
       -> attach_gold + benchmark-shaped aggregate    [S6/A1-A4]
 
 Because the synthetic staging table is a pure column mapping of
@@ -148,7 +148,12 @@ def run_trips_e2e(
         read_trips_csv,
         write_csv_shards,
     )
-    from nyc_taxi_data_clickhouse_spark.sources.parquet import attach_gold, write_gold
+    from nyc_taxi_data_clickhouse_spark.sources.parquet import (
+        GOLD_MONTH_COL,
+        GOLD_PARTITION_COL,
+        attach_gold,
+        write_gold,
+    )
     from nyc_taxi_data_clickhouse_spark.plans.transform import curate_trips
 
     workdir = workdir or scratch_dir("trips_e2e_")
@@ -162,13 +167,17 @@ def run_trips_e2e(
     staged = read_trips_csv(spark, staging_csv)
     curated = curate_trips(staged)
     write_gold(curated, gold_path)
-    # attach with the known table schema (+ the layout's partition
-    # column) so the chain stays total when the input — and thus the
-    # freshly published gold table — is empty
+    # attach with the known table schema (+ the layout's stored month
+    # and partition year) so the chain stays total when the input — and
+    # thus the freshly published gold table — is empty
     from pyspark.sql import types as T
 
     gold_schema = T.StructType(
-        list(curated.schema) + [T.StructField("pickup_month", T.StringType())]
+        list(curated.schema)
+        + [
+            T.StructField(GOLD_MONTH_COL, T.StringType()),
+            T.StructField(GOLD_PARTITION_COL, T.IntegerType()),
+        ]
     )
     return trips_e2e_aggregate(attach_gold(spark, gold_path, schema=gold_schema))
 
@@ -207,7 +216,7 @@ GROUP BY cab_type, payment_type_, passenger_count, year
     "pipeline_trips_e2e",
     _E2E_ORACLE,
     doc="E2E: synth staging -> gz-CSV sink -> schema'd CSV source -> "
-    "45-expr curation -> month-partitioned gold write -> attach -> "
+    "45-expr curation -> year-partitioned gold write -> attach -> "
     "benchmark rollup; oracle replays the whole chain as SQL over "
     "lineitem (S1-S6 + P2 + A1-A4 in one checked run)",
 )

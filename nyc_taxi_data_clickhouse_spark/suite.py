@@ -150,26 +150,50 @@ def _ordered_names(order: list[str], verified: dict[str, int]) -> list[str]:
     return sorted(order, key=lambda name: (name in verified, verified.get(name, 0)))
 
 
-def registry() -> dict[str, QuerySpec]:
-    # import for side effects: modules register their suite entries
-    from nyc_taxi_data_clickhouse_spark.operators import suite_entries  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import llm_extras  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.plans import sql_surface  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.plans import tpch_extra  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.streaming import entries  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import analysis  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.plans import surface_extra  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.plans import surface_gaps  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.functions import vectorized  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.plans import pipeline_e2e  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import corpus_ops  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import stats  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import curation  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import selection  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import graph  # noqa: F401
-    from nyc_taxi_data_clickhouse_spark.operators import vocab  # noqa: F401
+#: every module that registers suite entries, in registry order.  An
+#: entry's registration order is its module's place here, then its
+#: definition order within the module — never the order in which a
+#: process happened to import the modules.
+ENTRY_MODULES = tuple(
+    f"nyc_taxi_data_clickhouse_spark.{m}"
+    for m in (
+        "suite",
+        "operators.suite_entries",
+        "operators.llm_extras",
+        "plans.sql_surface",
+        "plans.tpch_extra",
+        "streaming.entries",
+        "operators.analysis",
+        "plans.surface_extra",
+        "plans.surface_gaps",
+        "functions.vectorized",
+        "plans.pipeline_e2e",
+        "operators.corpus_ops",
+        "operators.stats",
+        "operators.curation",
+        "operators.selection",
+        "operators.graph",
+        "operators.vocab",
+    )
+)
 
-    ordered = _ordered_names(list(_REGISTRY), _driver_verified_rounds())
+
+def registration_order() -> list[str]:
+    """Every entry name, ordered by ``ENTRY_MODULES`` and then by
+    definition order (a module's entries enter ``_REGISTRY`` in the
+    order its body runs, so a stable sort on the module keeps it).  An
+    entry defined in a module missing from ``ENTRY_MODULES`` raises
+    ``KeyError``."""
+    import importlib
+
+    for module in ENTRY_MODULES:
+        importlib.import_module(module)
+    rank = {module: i for i, module in enumerate(ENTRY_MODULES)}
+    return sorted(_REGISTRY, key=lambda name: rank[_REGISTRY[name].spark.__module__])
+
+
+def registry() -> dict[str, QuerySpec]:
+    ordered = _ordered_names(registration_order(), _driver_verified_rounds())
     return {name: _REGISTRY[name] for name in ordered}
 
 
@@ -550,7 +574,9 @@ def gold_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (
         li.withColumn("ship_year", F.year("l_shipdate"))
         .repartition(F.col("ship_year"))
-        .sortWithinPartitions("l_shipdate")
+        # the partition column leads, or the planned write's own sort
+        # on ship_year replaces this one and drops the clustering
+        .sortWithinPartitions("ship_year", "l_shipdate")
         .write.mode("overwrite")
         .partitionBy("ship_year")
         .parquet(out)

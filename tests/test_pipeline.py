@@ -4,13 +4,19 @@ with stage-boundary row-count reconciliation (SURVEY §5)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_clickhouse_spark.plans.joins import join_dims
 from nyc_taxi_data_clickhouse_spark.plans.transform import curate_trips
 from nyc_taxi_data_clickhouse_spark.sources.csv import read_trips_csv, write_csv_shards
-from nyc_taxi_data_clickhouse_spark.sources.parquet import attach_gold, write_gold
+from nyc_taxi_data_clickhouse_spark.sources.parquet import (
+    GOLD_SORT_COLS,
+    attach_gold,
+    write_gold,
+)
 
 
 def test_csv_roundtrip_null_normalization(spark, trips_staging, tmp_path):
@@ -82,30 +88,79 @@ def test_join_dims_left_semantics(spark, trips_staging, dims):
     assert 0 < matched < joined.count()
 
 
+def _scan_filters(df) -> tuple[str, str]:
+    """(PartitionFilters, PushedFilters) of the one parquet scan in
+    ``df``'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"PartitionFilters: \[(.*?)\], PushedFilters: \[(.*?)\]", plan)
+    assert m, plan
+    return m.group(1), m.group(2)
+
+
 def test_gold_write_attach_pruning(spark, trips_staging, tmp_path):
-    """S5/S6 + X2: partitioned gold write, zero-copy attach, and
-    partition pruning visible in the physical plan."""
+    """S5/S6 + X2: partitioned gold write, zero-copy attach; a year
+    filter prunes directories, a month filter is pushed to row groups."""
     gold = str(tmp_path / "gold")
     curated = curate_trips(trips_staging)
     write_gold(curated, gold)
     back = attach_gold(spark, gold, table="trips_gold_test")
 
-    # reconciliation + schema parity (pickup_month is the partition col)
+    # reconciliation + schema parity (pickup_month stored, pickup_year
+    # the partition column)
     assert back.count() == trips_staging.count()
-    assert set(back.columns) == set(curated.columns) | {"pickup_month"}
+    assert set(back.columns) == set(curated.columns) | {"pickup_month", "pickup_year"}
 
-    # X2: month filter prunes partitions at planning time
-    plan = (
-        back.filter(F.col("pickup_month") == "2015-06")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in plan or "pickup_month" in plan
+    # X2: the year filter prunes partitions at planning time ...
+    partition, pushed = _scan_filters(back.filter(F.col("pickup_year") == 2015))
+    assert "pickup_year" in partition and "pickup_year" not in pushed
+    # ... and the month filter reaches the parquet reader as a data filter
+    partition, pushed = _scan_filters(back.filter(F.col("pickup_month") == "2015-06"))
+    assert "pickup_month" in pushed and "pickup_month" not in partition
 
     # SQL entry point over the attached table (E1)
     n = spark.sql(
         "SELECT count(*) AS c FROM trips_gold_test WHERE pickup_month = '2015-06'"
     ).collect()[0]["c"]
     assert n == back.filter(F.col("pickup_month") == "2015-06").count()
+
+
+def _last_write_sorts(spark) -> set[tuple[str, ...]]:
+    """Sort keys of every Sort node in the last file write's plan, read
+    from the SQL status store (the adaptive plan lists a node once per
+    plan version, hence a set)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 5), min(n, 5))
+    for i in reversed(range(recent.size())):
+        plan = recent.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan:
+            return {
+                tuple(re.findall(r"(\w+)#\d+", m))
+                for m in re.findall(
+                    r"^\(\d+\) Sort\b.*\n(?:.+\n)*?Arguments: \[(.*?)\]", plan, re.M
+                )
+            }
+    raise AssertionError("no file write among the last executions")
+
+
+def test_gold_files_year_partitioned_and_date_clustered(spark, trips_staging, tmp_path):
+    """X2/X3 on disk: one ``pickup_year=`` directory level, and every
+    file ordered by the clustering key.  The write plan's one Sort leads
+    with the partition column, so the planned write adds no sort of its
+    own that would replace the clustering."""
+    import pyarrow.parquet as pq
+
+    gold = tmp_path / "gold"
+    write_gold(curate_trips(trips_staging), str(gold))
+    assert _last_write_sorts(spark) == {("pickup_year", *GOLD_SORT_COLS)}
+
+    files = sorted(gold.glob("*/*.parquet"))
+    assert files
+    assert {f.parent.name.split("=")[0] for f in files} == {"pickup_year"}
+    for f in files:
+        rows = pq.read_table(f, columns=list(GOLD_SORT_COLS)).to_pylist()
+        keys = [tuple(r[c] for c in GOLD_SORT_COLS) for r in rows]
+        assert keys == sorted(keys), f.name
 
 
 def test_catalog_row_counts(spark, trips_staging):

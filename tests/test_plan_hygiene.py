@@ -248,20 +248,23 @@ def test_selection_broadcast_gate_plan_shape(spark, monkeypatch, op_name):
     for k in keys:
         spark.conf.set(k, "-1")
     try:
-        below = physical(op(spark, SF_SMOKE, broadcast_side=True))
+        # the gate decides when the operator builds its plan, so each
+        # frame keeps the side of the bound it was built under
+        monkeypatch.setattr(partitioning, "BROADCAST_GROUP_BOUND", 10**9)
+        forced = op(spark, SF_SMOKE)
+        below = physical(forced)
         assert "BroadcastHashJoin" in below, below[:1500]
 
         # force the guard over the bound: every non-empty side table
         # exceeds a zero bound, so default mode must fall back
         monkeypatch.setattr(partitioning, "BROADCAST_GROUP_BOUND", 0)
-        above = op(spark, SF_SMOKE, broadcast_side=None)
+        above = op(spark, SF_SMOKE)
         plan = physical(above)
         assert "BroadcastHashJoin" not in plan, plan[:1500]
         assert "BroadcastExchange" not in plan, plan[:1500]
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan[:1500]
 
         # the gate must be plan-only: both sides byte-identical
-        forced = op(spark, SF_SMOKE, broadcast_side=True)
         assert sorted(map(tuple, above.collect())) == sorted(
             map(tuple, forced.collect())
         )

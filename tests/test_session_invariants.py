@@ -134,7 +134,7 @@ def test_registry_makes_no_subprocess_call():
         print(json.dumps({
             "calls": calls,
             "names": names,
-            "registered": list(suite._REGISTRY),
+            "registered": suite.registration_order(),
             "verified": suite._driver_verified_rounds(),
         }))
         """
@@ -155,6 +155,35 @@ def test_registry_makes_no_subprocess_call():
         key=lambda n: (n in verified, verified.get(n, 0), registered.index(n)),
     )
     assert got["names"] == expected
+
+
+def test_registry_order_ignores_import_history():
+    """An operator module imported before the first registry() call
+    must not move its entries: the order comes from suite.ENTRY_MODULES
+    and definition order, not from when _REGISTRY was filled."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    def names(pre_import: str) -> list[str]:
+        code = (
+            f"{pre_import}\n"
+            "import json\n"
+            "from nyc_taxi_data_clickhouse_spark import suite\n"
+            "print(json.dumps(list(suite.registry())))\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=Path(__file__).resolve().parents[1],
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+        return json.loads(out.strip().splitlines()[-1])
+
+    clean = names("")
+    assert names("import nyc_taxi_data_clickhouse_spark.operators.curation") == clean
 
 
 # ---------------------------------------------------------------------------

@@ -68,7 +68,7 @@ def test_rotation_orders_stalest_verified_first():
     rounds = suite._driver_verified_rounds()
     never = [n for n in order if n not in rounds]
     assert order[: len(never)] == never, "a verified entry precedes a never-verified one"
-    registered = list(suite._REGISTRY)
+    registered = suite.registration_order()
     assert never == sorted(never, key=registered.index), (
         "never-verified entries out of registration order"
     )
