@@ -898,8 +898,8 @@ def connected_components_star(
     drop; on a cluster the blocks are distributed and this pacing is a
     non-issue, but a SINGLE-JVM stress harness running several
     ~100M-edge invocations back-to-back can outrun the cleaner and
-    exhaust the heap — run one JVM per measurement arm there (the r10
-    star_sizing_probe does; see BENCH_NOTES round 10).
+    exhaust the heap — run one JVM per measurement arm there
+    (`probe.py star --variants sized`; see BENCH_NOTES round 10).
     """
     # one eager materialization of the pair pipeline: edges and nodes
     # both force jobs, and each would otherwise re-execute the whole

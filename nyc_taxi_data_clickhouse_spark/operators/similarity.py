@@ -282,24 +282,6 @@ def _hyperplane(dim: int, plane_idx: int) -> list[float]:
     return out
 
 
-def hyperplane_signature(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int = 16
-) -> Column:
-    """Bit signature: sign pattern of <v, plane_i> for i < n_planes,
-    packed into a long.  Built-ins only (zip_with + aggregate folds)."""
-    sig = F.lit(0).cast("long")
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(x) for x in _hyperplane(dim, i)])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(d >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return sig
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -247,6 +247,15 @@ def materialize_big_documents(
     return str(out), n
 
 
+def big_lineitem_path(sf_dir: str, factor: int, scratch_root: str) -> Path:
+    """Where :func:`materialize_big_lineitem` keeps the replicated table."""
+    sf_name = Path(sf_dir).name or "sf"
+    # layout v3: l_shipdate DATE + enum-coded returnflag/linestatus +
+    # INT l_quantity (see below) — new directory so a stale v1/v2
+    # materialization is never silently reused
+    return Path(scratch_root) / f"{sf_name}_x{factor}_v3" / "lineitem"
+
+
 def materialize_big_lineitem(
     spark: SparkSession,
     sf_dir: str,
@@ -257,11 +266,7 @@ def materialize_big_lineitem(
     """Replicate ``sf_dir``'s lineitem ``factor``× into a cached parquet
     table; return ``(path, row_count)``.  Reuses an existing
     materialization for the same (sf, factor)."""
-    sf_name = Path(sf_dir).name or "sf"
-    # layout v3: l_shipdate DATE + enum-coded returnflag/linestatus +
-    # INT l_quantity (see below) — new directory so a stale v1/v2
-    # materialization is never silently reused
-    out = Path(scratch_root) / f"{sf_name}_x{factor}_v3" / "lineitem"
+    out = big_lineitem_path(sf_dir, factor, scratch_root)
     marker = out / "_SUCCESS"
     if not marker.exists():
         li = spark.read.parquet(str(Path(sf_dir) / "lineitem.parquet"))
@@ -294,7 +299,7 @@ def materialize_big_lineitem(
             # testdata ships midnight-aligned TIMESTAMPs (verified: 0 of
             # 600k rows have a time component); year()/day-boundary
             # filters are lossless on the DATE form and decode 2.2×
-            # faster (scan_profile.py: year-scan 0.31 s -> 0.14 s, q3
+            # faster (probe.py scan: year-scan 0.31 s -> 0.14 s, q3
             # 0.75 -> 0.39 s, q4 1.29 -> 0.99 s at 60 M rows).
             .withColumn("l_shipdate", F.to_date("l_shipdate"))
             # store the enum-like strings as 1-byte codes and the
