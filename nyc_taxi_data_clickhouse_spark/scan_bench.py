@@ -331,6 +331,10 @@ def materialize_big_lineitem(
     return str(out), n
 
 
+#: default replication factor of the scan table (see :func:`scan_factor`)
+SCAN_FACTOR = 1833
+
+
 def scan_factor() -> int:
     """Replication factor for the scan table.  Default ×1833 puts the
     sf0.1 lineitem at 1,099,800,000 rows — the reference's own 1.1 B-row
@@ -340,7 +344,7 @@ def scan_factor() -> int:
     60 M-row wall by 18.33 multiplies the floor too, overstating the
     1.1 B wall by up to 1.8 s/query).  Materialization is ~4.3 GB of
     parquet, written once per (sf, factor) and reused."""
-    return int(os.environ.get("BENCH_SCAN_FACTOR", "1833"))
+    return int(os.environ.get("BENCH_SCAN_FACTOR", SCAN_FACTOR))
 
 
 def scan_enabled() -> bool:

@@ -5,9 +5,10 @@ Usage::
 
     python probe.py star [--edges 25000000,100000000] [--repeats 2]
                          [--variants sized,control] [--out-suffix S]
-    python probe.py jaccard-cost [--factor 256] [--repeats 3] [--sf-dir D]
+    python probe.py jaccard-cost [--sf-dir D]
     python probe.py scan prepare|time VARIANT|all [--shapes q1,q2,q3,q4]
-                         [--repeats 7] [--variants ...] [--sf-dir D] [--scan-dir D]
+                         [--repeats 7] [--variants ...] [--factor 1833]
+                         [--sf-dir D] [--scan-dir D]
     python probe.py plans --report [--sf-dir D] [NAME ...]
     python probe.py plans --out SUBDIR --tag TAG [--sf-dir D] [NAME ...]
 
@@ -32,8 +33,8 @@ Payloads are named for the round ``bench.next_round()`` returns.
   recorded as an outcome and ends the probe.
 - ``jaccard-cost``: the jaccard live calibration probe timed alone
   against the whole ``ngram_jaccard_pairs`` pipeline at an engaged
-  replication factor; merged into ``SCALING_CPU_r{N}_jaccard.json``
-  under ``calibration_probe``.
+  replication factor (x256, min of 3); merged into
+  ``SCALING_CPU_r{N}_jaccard.json`` under ``calibration_probe``.
 - ``scan``: the q1..q4 scan shapes on the replicated lineitem, one
   storage or reader variant at a time (see ``SCAN_VARIANTS``).  Each
   variant is timed in its own fresh JVM (``all`` re-invokes this file):
@@ -79,6 +80,9 @@ LONG_RUN_CONF = {
     "spark.ui.retainedJobs": "100000",
 }
 STAR_VARIANTS = ("sized", "control")
+#: corpus replication factor that engages the jaccard calibration gate
+JACCARD_FACTOR = 256
+JACCARD_REPEATS = 3
 #: scan variant -> (table under the factor root, session conf)
 SCAN_VARIANTS = {
     # the bench layout: snappy, unsorted, 64 files
@@ -274,20 +278,20 @@ def star(args) -> None:
 
 def jaccard_cost(args) -> None:
     spark = _session("jaccard-probe-cost")
-    sf_dir = materialize(spark, args.sf_dir, args.factor)["salted"]
+    sf_dir = materialize(spark, args.sf_dir, JACCARD_FACTOR)["salted"]
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     # the first call is also the untimed warm-up
     width = dedup._calibrated_jaccard_partitions(docs, "text", "doc_id", 3)
     if width is None:
         raise SystemExit(
-            f"--factor {args.factor} does not engage the calibration gate, "
-            "so the probe costs nothing by construction; raise --factor"
+            f"x{JACCARD_FACTOR} of {args.sf_dir} does not engage the "
+            "calibration gate, so the probe costs nothing by construction"
         )
 
     def best_wall(fn) -> float:
         walls = []
-        for _ in range(args.repeats):
+        for _ in range(JACCARD_REPEATS):
             _quiesce(spark)
             t0 = time.perf_counter()
             fn()
@@ -304,12 +308,12 @@ def jaccard_cost(args) -> None:
     pipeline()  # warm-up
     pipe = best_wall(pipeline)
     row = {
-        "factor": args.factor,
+        "factor": JACCARD_FACTOR,
         "derived_width": width,
         "probe_wall_sec": round(probe, 3),
         "pipeline_wall_sec": round(pipe, 3),
         "probe_fraction": round(probe / pipe, 4),
-        "repeats": args.repeats,
+        "repeats": JACCARD_REPEATS,
         "note": "probe = one column-pruned count + one hash-spread "
         "sampled tokenize agg; pipeline includes the probe (it runs "
         "inside ngram_jaccard_pairs when shuffle_partitions=None)",
@@ -329,9 +333,7 @@ def jaccard_cost(args) -> None:
 
 def _factor_root(args) -> Path:
     """The directory holding the replicated lineitem and its variants."""
-    path = scan_bench.big_lineitem_path(
-        args.sf_dir, scan_bench.scan_factor(), args.scan_dir
-    )
+    path = scan_bench.big_lineitem_path(args.sf_dir, args.factor, args.scan_dir)
     return path.parent
 
 
@@ -340,7 +342,7 @@ def scan_prepare(args) -> None:
     is never used for timing."""
     spark = _session("scan-profile-prepare")
     base_path, rows = scan_bench.materialize_big_lineitem(
-        spark, args.sf_dir, scan_bench.scan_factor(), args.scan_dir
+        spark, args.sf_dir, args.factor, args.scan_dir
     )
     root = _factor_root(args)
     for table, clustered, codec in [
@@ -392,7 +394,8 @@ def scan_time(args) -> None:
 
 
 def scan_all(args) -> None:
-    dirs = ["--sf-dir", args.sf_dir, "--scan-dir", args.scan_dir]
+    dirs = ["--factor", str(args.factor), "--sf-dir", args.sf_dir,
+            "--scan-dir", args.scan_dir]
 
     def run(*argv: str) -> subprocess.CompletedProcess:
         return subprocess.run(
@@ -560,9 +563,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.set_defaults(run=star)
 
     p = sub.add_parser("jaccard-cost", help="jaccard calibration probe vs its pipeline")
-    p.add_argument("--factor", type=_positive_int, default=256,
-                   help="corpus replication factor (must engage the gate)")
-    p.add_argument("--repeats", type=_positive_int, default=3)
     p.add_argument("--sf-dir", type=_directory, default=SF_BENCH)
     p.set_defaults(run=jaccard_cost)
 
@@ -573,6 +573,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         default=["q1", "q2", "q3", "q4"])
     scan_p.add_argument("--repeats", type=_positive_int, default=7)
     scan_p.add_argument("--variants", type=_subset(SCAN_VARIANTS), default=list(SCAN_VARIANTS))
+    scan_p.add_argument("--factor", type=_positive_int, default=scan_bench.SCAN_FACTOR,
+                        help="lineitem replication factor")
     scan_p.add_argument("--sf-dir", type=_directory, default=SF_BENCH)
     scan_p.add_argument("--scan-dir", default=str(ROOT / ".scan_bench"),
                         help="where the replicated tables are kept")
